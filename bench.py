@@ -215,16 +215,14 @@ def main() -> None:
     stats: dict[str, list[float]] = {}
 
     def run_reps(name: str, n_reps: int, first: float | None = None) -> float:
-        # SLOT-COLD REPS (round-8 VERDICT "what's wrong" #1): the
-        # sameSemantics-reuse slots (shingle_frame, minhash_band_sigs,
-        # tri_edges, ...) would otherwise hand reps 2..n the frame
-        # materialized by rep 1, so the reported median excluded the
-        # shared-frame build cost.  Releasing every slot before each
-        # timed rep makes the median include the build; rep 1 keeps
-        # whatever warmth the previous query left (cross-operator
-        # sharing is a real session feature and stays visible in the
-        # min of `stats_min_med_max`).  The release itself runs OUTSIDE
-        # the timed region.
+        # SLOT-COLD REPS (round-8 VERDICT "what's wrong" #1): every
+        # timed rep starts with no live slot.  Each slot call turns its
+        # key over, so no rep reuses a frame an earlier rep or query
+        # built under that key; the release also drops frames cached
+        # under other keys, which Spark's CacheManager could otherwise
+        # substitute into this rep's plan, so the median includes every
+        # shared-frame build.  The release runs OUTSIDE the timed
+        # region.
         reps = [] if first is None else [first]
         while len(reps) < n_reps:
             release_all_slots()

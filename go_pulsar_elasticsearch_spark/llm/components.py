@@ -469,17 +469,11 @@ FROM per_node
 
 def _candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oriented (src < dst) MinHash candidate edge list both graph
-    QA ops build on, slot-cached with cache_slot_reuse so whichever op
-    runs second REUSES the first's materialization (the builds are
-    semantically identical, so sameSemantics hits) — one band self-join
-    per session, not one per operator."""
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
-
+    QA ops build on, slot-cached: the band self-join is the costliest
+    stage of the graph build."""
     sigs = minhash_band_sigs(t(spark, sf_dir, "documents"))
     a, b = sigs.alias("a"), sigs.alias("b")
-    return cache_slot_reuse(
+    return cache_slot(
         "tri_edges",
         a.join(
             b,
@@ -516,10 +510,6 @@ def _adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly instead of re-aggregating the edge list."""
     from pyspark.sql import Window
 
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
-
     edges = _candidate_edges(spark, sf_dir)
     half = edges.select(
         F.explode(
@@ -539,7 +529,7 @@ def _adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_out = (F.col("dn") < F.col("dq")) | (
         (F.col("dn") == F.col("dq")) & (F.col("node") < F.col("other"))
     )
-    return cache_slot_reuse(
+    return cache_slot(
         "tri_adj",
         hd.groupBy("node").agg(
             F.first("dn").alias("d"),
@@ -548,9 +538,10 @@ def _adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _triangles_per_node(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-NODE triangle aggregate both graph QA ops consume,
-    slot-cached (round-5 VERDICT #5), computed by the EDGE-ITERATOR
+def _triangles_per_node(adj: DataFrame) -> DataFrame:
+    """The per-NODE triangle aggregate over the _adjacency frame ``adj``
+    that both graph QA ops consume, slot-cached (round-5 VERDICT #5),
+    computed by the EDGE-ITERATOR
     with adjacency-list intersection instead of a wedge self-join
     (round-6 VERDICT #3): on this clique-rich near-dup graph a wedge
     join materializes sum(outdeg^2) ~ 80x|E| rows through a sort-merge
@@ -571,11 +562,6 @@ def _triangles_per_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is co-partitioned (zero new exchange); only the second (on
     `b`) repartitions the THIN (a, b) stream.  The out-list arrays ride
     the node-cardinality build sides, never a fan-out stream."""
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
-
-    adj = _adjacency(spark, sf_dir)
     o = adj.select(F.col("node").alias("a"), F.explode("outs").alias("b"))
     e = (
         o.join(
@@ -612,7 +598,7 @@ def _triangles_per_node(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("transform(ws, w -> struct(w AS node, CAST(1 AS BIGINT) AS c))"),
     )
     corners = e.select(F.explode(contrib).alias("k")).select("k.node", "k.c")
-    return cache_slot_reuse(
+    return cache_slot(
         "tri_per_node",
         corners.groupBy("node").agg(F.sum("c").alias("n_tri")),
     )
@@ -629,10 +615,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     are invariant to the counting order (every triangle is still found
     exactly once), so the id-ordered DuckDB oracle certifies the
     degree-ordered plan unchanged.  The per-node aggregate is
-    slot-cached and shared with graph_clustering_coeff
+    slot-cached and built by the same helper as graph_clustering_coeff
     (_triangles_per_node)."""
     tune(spark)
-    return _triangles_per_node(spark, sf_dir).select(
+    return _triangles_per_node(_adjacency(spark, sf_dir)).select(
         F.col("node").alias("doc_id"),
         F.col("n_tri").alias("n_triangles"),
     )
@@ -692,20 +678,19 @@ FROM deg d LEFT JOIN tri_per t ON t.node = d.node
 @register("graph_clustering_coeff", _CLUSTERING_ORACLE)
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree + triangle count + local clustering coefficient per node
-    of the near-dup candidate graph.  Shares THREE slot-cached stages
-    with graph_triangle_count: the candidate edge list
-    (_candidate_edges), the adjacency layer (_adjacency — whose degree
-    column this op projects directly, so the degree side re-aggregates
-    nothing) AND the per-node triangle aggregate (_triangles_per_node,
-    round-5 VERDICT #5).  Both final join inputs are hash-partitioned
+    of the near-dup candidate graph.  Builds on the same THREE
+    slot-cached stages as graph_triangle_count: the candidate edge list
+    (_candidate_edges), the adjacency layer (_adjacency — built once
+    here, feeding the triangle count and projected directly for the
+    degree, so the degree side re-aggregates nothing) AND the per-node
+    triangle aggregate (_triangles_per_node, round-5 VERDICT #5).  Both final join inputs are hash-partitioned
     on `node` by construction, so the join itself adds no exchange.
     The coefficient is an IEEE-exact division of exact integers —
     hash-stable across engines."""
     tune(spark)
-    tri_per = _triangles_per_node(spark, sf_dir)
-    deg = _adjacency(spark, sf_dir).select(
-        "node", F.col("d").alias("degree")
-    )
+    adj = _adjacency(spark, sf_dir)
+    tri_per = _triangles_per_node(adj)
+    deg = adj.select("node", F.col("d").alias("degree"))
     coeff = F.when(
         F.col("degree") >= 2,
         (2 * F.coalesce(F.col("n_tri"), F.lit(0))).cast("double")

@@ -427,15 +427,12 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver state is the single fixed-size bitmap (index-metadata sized,
     like the IVF centroid table)."""
     tune(spark)
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
+    from go_pulsar_elasticsearch_spark.functions.caching import cache_slot
 
     # three consumers (bloom build, probe, verify join) share one
     # materialization of the hashed gram set instead of re-exploding
-    # the corpus per branch; _reuse so the streaming twin's identical
-    # lineage shares the same frame instead of evicting it
-    hashed = cache_slot_reuse(
+    # the corpus per branch
+    hashed = cache_slot(
         "decontam_bloom_grams",
         gram_hashes(t(spark, sf_dir, "documents")),
     )
@@ -520,14 +517,11 @@ def decontam_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _drive_bloom_stream(spark, sf_dir)
     bloom_bytes = bm.merged_bloom_bytes(spark, store)
 
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
+    from go_pulsar_elasticsearch_spark.functions.caching import cache_slot
 
-    # probe + verify share one materialization of the hashed gram set —
-    # and cache_slot_reuse makes it the SAME frame the batch op caches
-    # (identical lineage), so neither op re-explodes the corpus
-    hashed = cache_slot_reuse(
+    # probe + verify share one materialization of the hashed gram set,
+    # so the corpus is exploded once
+    hashed = cache_slot(
         "decontam_bloom_grams", gram_hashes(t(spark, sf_dir, "documents"))
     )
     candidates = (

@@ -121,23 +121,13 @@ def minhash_band_sigs(docs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
     back with a groupBy exchange; this computes identical minima inside
     the scan stage.
 
-    Eagerly checkpointed via the lineage-keyed reuse slot (r9, VERDICT
-    item 1): every consumer self-joins the sig frame (both band-bucket
-    sides), so the lazy persist still paid Catalyst re-analysis of the
-    shingle-array build per reference AND 8 md5 streams per doc were
-    recomputed on the probe side of the first execution; the eager
-    checkpoint runs the build exactly once and every reference is a
-    LogicalRDD leaf (guide §3.3).  checkpoint_slot_reuse (not
-    checkpoint_slot) keeps the cross-operator contract: ops over the
-    SAME docs lineage (near_dedup_minhash / minhash_verify_jaccard /
-    minhash_recall_eval over the same rep_docs) share one
-    materialization per session, exactly like the cache_slot_reuse
-    family — a different corpus (curation/crawl stage survivors, stream
-    micro-batches) still turns the slot over."""
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        checkpoint_slot_reuse,
-    )
-
+    Eagerly checkpointed (r9, VERDICT item 1): every consumer
+    self-joins the sig frame (both band-bucket sides), so the lazy
+    persist still paid Catalyst re-analysis of the shingle-array build
+    per reference AND 8 md5 streams per doc were recomputed on the
+    probe side of the first execution; the eager checkpoint runs the
+    build exactly once and every reference is a LogicalRDD leaf (guide
+    §3.3)."""
     arrs = doc_shingle_arrays(docs)
     extra = [c for c in arrs.columns if c == "cnt"]
     sig_cols = [
@@ -148,7 +138,7 @@ def minhash_band_sigs(docs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
     ]
     wide = arrs.select("doc_id", *extra, *sig_cols)
     stack_args = ", ".join(f"{b}, sig{b}" for b in range(n_bands))
-    return checkpoint_slot_reuse(
+    return checkpoint_slot(
         "minhash_band_sigs",
         wide.select(
             "doc_id",
@@ -268,23 +258,16 @@ def shingle_frame(docs: DataFrame) -> DataFrame:
     (`size(arr)` + `explode(arr)`) makes Catalyst re-derive the array
     build around the Generate — measured 9x slower at sf0.1.
 
-    Kept a LAZY reuse slot (r9 A/B, measured): converting this frame to
-    the eager checkpoint (checkpoint_slot_reuse) regressed
-    ngram_jaccard 0.62 -> 1.02 s and ngram_containment 0.65 -> 1.01 s
-    median-of-5 — the posting list is the corpus EXPLODED (hundreds of
-    rows per doc), so the eager materialization pass costs more than
-    the per-reference re-analysis it saves; the sig frame (8 rows/doc)
-    is the opposite trade and IS checkpointed.  Lineage-keyed reuse:
-    jaccard + containment over the SAME docs frame share one
-    materialized posting list per session instead of evicting each
-    other (a different corpus still turns the slot over)."""
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
-
+    Kept a LAZY slot (r9 A/B, measured): converting this frame to the
+    eager checkpoint regressed ngram_jaccard 0.62 -> 1.02 s and
+    ngram_containment 0.65 -> 1.01 s median-of-5 — the posting list is
+    the corpus EXPLODED (hundreds of rows per doc), so the eager
+    materialization pass costs more than the per-reference re-analysis
+    it saves; the sig frame (8 rows/doc) is the opposite trade and IS
+    checkpointed."""
     arrs = doc_shingle_arrays(docs)
     extra = [c for c in arrs.columns if c == "cnt"]
-    return cache_slot_reuse(
+    return cache_slot(
         "shingle_frame",
         arrs.select(
             "doc_id",
@@ -1401,9 +1384,7 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quotes, doc-in-doc) that the symmetric Jaccard denominator dilutes.
 
     Same inverted-index plan as ngram_jaccard, built by the same
-    shingle_frame helper, whose slot is lineage-keyed
-    (cache_slot_reuse): over the same docs frame both ops share ONE
-    materialized posting list per session; only the pair aggregation
+    slot-cached shingle_frame helper; only the pair aggregation
     differs."""
     tune(spark)
     docs = t(spark, sf_dir, "documents")
@@ -1504,12 +1485,8 @@ def dup_span_remove_df(docs: DataFrame, n: int = _SPAN_N) -> DataFrame:
     lists, bounded by duplication depth."""
     from pyspark.sql import Window
 
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
-
     w = F.split("text", " ")
-    based = cache_slot_reuse(
+    based = cache_slot(
         "span_based",
         docs.select("doc_id", w.alias("w")).withColumn("L", F.size("w")),
     )
@@ -1671,12 +1648,8 @@ def dup_span_remove_maximal_df(
     merge state is one struct array bounded by doc length."""
     from pyspark.sql import Window
 
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
-
     w = F.split("text", " ")
-    based = cache_slot_reuse(
+    based = cache_slot(
         "span_based",
         docs.select("doc_id", w.alias("w")).withColumn("L", F.size("w")),
     )

@@ -423,13 +423,11 @@ def msearch_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiler; each section is a map-side-combined aggregate whose
     output is bucket-count-sized, and the union is row-count-bounded by
     the two bucket vocabularies."""
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        cache_slot_reuse,
-    )
+    from go_pulsar_elasticsearch_spark.functions.caching import cache_slot
 
     tune(spark)
     docs = t(spark, sf_dir, "documents")
-    base = cache_slot_reuse(
+    base = cache_slot(
         "msearch_base",
         docs.select("doc_id", "source", "lang", "n_chars"),
     )

@@ -94,7 +94,6 @@ def dedup_batch(
         f"{store_path}/epoch={epoch_id}"
     )
     survivors.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-    sigs.unpersist()
 
 
 def run_incremental_near_dedup(

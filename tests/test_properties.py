@@ -181,28 +181,60 @@ def test_dsum_out_scale_clamped_to_scale(spark):
 
 
 def test_cache_slot_bounds_live_frames(spark):
-    """cache_slot keeps at most ONE cached frame per key: re-caching
-    under the same key unpersists the previous occupant (the former
-    .persist() leak), and unpersisting never breaks an old plan — it
-    just recomputes."""
+    """Both slot functions keep at most ONE frame per key: re-slotting
+    under the same key evicts the previous occupant (the former
+    .persist() leak), and eviction never breaks an old plan — a cached
+    frame just recomputes, a checkpointed one keeps its blocks until
+    the reference is garbage-collected."""
     from go_pulsar_elasticsearch_spark.functions.caching import (
         _slots,
         cache_slot,
-        release_slot,
+        checkpoint_slot,
+        release_all_slots,
     )
 
-    df1 = cache_slot("_test_slot", spark.range(10))
-    assert df1.count() == 10  # materialize into the cache
-    assert df1.storageLevel.useMemory or df1.storageLevel.useDisk
-    df2 = cache_slot("_test_slot", spark.range(20))
-    assert df2.count() == 20
-    # old frame is uncached but still computable
-    assert not df1.storageLevel.useMemory and not df1.storageLevel.useDisk
-    assert df1.count() == 10
-    assert _slots["_test_slot"] is df2
-    release_slot("_test_slot")
-    assert "_test_slot" not in _slots
-    assert not df2.storageLevel.useMemory and not df2.storageLevel.useDisk
+    for put in (cache_slot, checkpoint_slot):
+        df1 = put("_test_slot", spark.range(10))
+        assert df1.count() == 10  # materialize
+        if put is cache_slot:
+            assert df1.storageLevel.useMemory or df1.storageLevel.useDisk
+        df2 = put("_test_slot", spark.range(20))
+        assert df2.count() == 20
+        # the evicted frame still counts correctly after the turnover
+        if put is cache_slot:
+            assert not df1.storageLevel.useMemory
+            assert not df1.storageLevel.useDisk
+        assert df1.count() == 10
+        assert _slots["_test_slot"] is df2
+        release_all_slots()
+        assert "_test_slot" not in _slots
+        assert not df2.storageLevel.useMemory and not df2.storageLevel.useDisk
+        assert df2.count() == 20
+
+
+def test_minhash_band_sigs_sees_in_place_rewrite(spark, tmp_path):
+    """A parquet path rewritten in place yields a new frame with the
+    SAME plan semantics as the old one, so a lineage-keyed slot would
+    hand back the stale occupant: the second build must read the new
+    rows."""
+    from go_pulsar_elasticsearch_spark.llm.dedup import minhash_band_sigs
+
+    p = str(tmp_path / "docs.parquet")
+    text = "the quick brown fox jumps over the lazy dog"
+
+    def write(ids):
+        spark.createDataFrame(
+            [(i, text) for i in ids], "doc_id long, text string"
+        ).write.mode("overwrite").parquet(p)
+
+    def ids():
+        sigs = minhash_band_sigs(spark.read.parquet(p))
+        return sorted({r["doc_id"] for r in sigs.collect()})
+
+    write([1, 2])
+    assert ids() == [1, 2]
+    write([7, 8, 9])
+    assert ids() == [7, 8, 9]
 
 
 _avro_text = st.text(
@@ -243,54 +275,3 @@ def test_avro_codec_roundtrip_any_record(rec):
 
     schema = parse_schema(INGESTION_AVRO_SCHEMA)
     assert decode(schema, encode(schema, rec)) == rec
-
-
-def test_durable_checkpoint_slot_round_trips(spark, tmp_path):
-    """r9: with spark.gpe.slots.durableCheckpoint=true, checkpoint_slot
-    materializes to parquet under spark.gpe.slots.dir and returns the
-    read-back scan — same rows, a file-scan leaf instead of a
-    LogicalRDD, fresh subdirectory per turnover (an in-place overwrite
-    would corrupt still-unexecuted plans over the previous occupant)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from go_pulsar_elasticsearch_spark.functions.caching import (
-        checkpoint_slot,
-        checkpoint_slot_reuse,
-        release_slot,
-    )
-
-    spark.conf.set("spark.gpe.slots.durableCheckpoint", "true")
-    spark.conf.set("spark.gpe.slots.dir", str(tmp_path))
-    try:
-        src = spark.range(50).select(
-            "id", (F.col("id") * 2).alias("twice")
-        )
-        out = checkpoint_slot("_test_durable", src)
-        assert sorted(r["twice"] for r in out.collect()) == [
-            2 * i for i in range(50)
-        ]
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "parquet" in plan.lower()
-        first_dirs = set(os.listdir(tmp_path))
-        assert first_dirs  # wrote under the configured dir
-        # turnover writes a FRESH subdirectory; the old frame stays valid
-        out2 = checkpoint_slot("_test_durable", spark.range(5).select(
-            "id", (F.col("id") * 3).alias("twice")
-        ))
-        assert set(os.listdir(tmp_path)) > first_dirs
-        assert out.count() == 50  # previous occupant still readable
-        assert out2.count() == 5
-        # the reuse variant returns the SAME materialization for an
-        # identical lineage
-        s2 = spark.range(7).select("id")
-        a = checkpoint_slot_reuse("_test_durable_r", s2)
-        b = checkpoint_slot_reuse(
-            "_test_durable_r", spark.range(7).select("id")
-        )
-        assert a is b
-    finally:
-        spark.conf.set("spark.gpe.slots.durableCheckpoint", "false")
-        release_slot("_test_durable")
-        release_slot("_test_durable_r")

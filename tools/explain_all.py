@@ -45,7 +45,7 @@ def main() -> None:
         "full lineage at EVERY reference, so multi-layer compositions",
         "(the graph QA pair's adjacency layer, referenced 3x; the crawl",
         "pipelines) over-count runtime exchanges — at execution each",
-        "cached subtree's shuffles run once per session.  Runtime truth",
+        "cached subtree's shuffles run once per query.  Runtime truth",
         "lives in the cold scale-gate timings (SCALE.md).",
         "",
         "| query | exchanges | joins | flags |",
