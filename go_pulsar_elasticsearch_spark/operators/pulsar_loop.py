@@ -68,9 +68,10 @@ def index_and_reconcile(
     uuid reconcile independently (round-5 ADVICE).  Returns (acked,
     nacked); only batch-bounded metadata ever reaches the driver.
 
-    Shared by the hand-rolled drain (run_delivery_loop) and the
-    Structured Streaming foreachBatch body (sources/pulsar_stream.py) —
-    one certified reconciliation, two drivers."""
+    Used by the hand-rolled drain (run_delivery_loop) only.  The
+    Structured Streaming twin (sources/pulsar_stream.py) applies the
+    same ack/nack rules in its own foreachBatch epoch: one executor
+    job, no persist, no second collect."""
     from go_pulsar_elasticsearch_spark.ingest.avro import (
         decode_avro_payload,
     )
@@ -322,8 +323,8 @@ def pulsar_delivery_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drive_stream(spark: SparkSession, sf_dir: str) -> tuple:
     """Seed + drain the LIVE Structured Streaming composition once per
-    (process, sf_dir): readStream.format("pulsar_broker_sim") ->
-    foreachBatch(decode -> _bulk -> ack/nack) under a checkpoint — the
+    (process, sf_dir): readStream.format("pulsar_broker_sim") -> decode
+    -> foreachBatch(_bulk -> manifest -> ack/nack) under a checkpoint — the
     reference's channel wiring (main.go:250-282) run by the engine's
     own trigger/offset machinery instead of a driver while-loop."""
     from go_pulsar_elasticsearch_spark.streaming.drain import drained

@@ -27,6 +27,11 @@ first-class, composable sink rather than only a callback:
 100 TB posture: this is exactly the executor-parallel bulk-worker
 topology of the real connector — N partitions post independently, the
 driver only sees counts; no payload ever funnels through the driver.
+
+The sink never acks or nacks a broker: the Pulsar delivery stream
+(sources/pulsar_stream.py) reconciles in a ``foreachBatch`` epoch
+instead, because every epoch through a Python DataSource sink pays two
+Python planner processes (writer build and commit) on the driver.
 """
 
 from __future__ import annotations
@@ -269,132 +274,6 @@ class EsBulkStreamWriter(DataSourceStreamWriter):
             json.dump({"batch_id": batchId}, fh)
 
 
-@dataclass
-class EsBulkAckCommitMessage(WriterCommitMessage):
-    partition_id: int
-    ok_msg_ids: list
-    bad_msg_ids: list
-
-
-class EsBulkAckStreamWriter(EsBulkStreamWriter):
-    """The broker-reconciling sink (round-6 VERDICT #2): rows carry a
-    ``msg_id`` column alongside the document fields; each partition
-    posts its documents executor-side and reports per-message outcomes
-    in its commit message; the DRIVER-side ``commit`` acks successes
-    and nacks failures over the broker's HTTP wire — so ack/nack is
-    driven by the EPOCH commit (all partitions succeeded), never by a
-    broker object closed over from a test harness.  ``abort`` acks
-    nothing: the epoch replays from the source spool and reconciles on
-    the retry (at-least-once + idempotent uuid-keyed index, es.go:186).
-
-    Poison rows (uuid NULL — undecodable payloads) are never posted;
-    their msg_ids go straight to the nack list, same escalator as the
-    certified loop (main.go:131-143 DLQ routing).
-
-    Commit messages are batch-bounded metadata (msg_id longs only) —
-    the same driver-side bound as the reference's in-memory message
-    handles (pulsar.go MessageChannel buffering)."""
-
-    def __init__(self, options: dict):
-        super().__init__(options)
-        self.broker_url = options["broker_url"].rstrip("/")
-        self.topic = options["topic"]
-        self.subscription = options["subscription"]
-
-    def write(self, iterator):
-        from pyspark import TaskContext
-
-        from go_pulsar_elasticsearch_spark.sources.es_bulk import (
-            BulkClientOptions,
-            _to_jsonable,
-            bulk_index_docs,
-        )
-
-        opts = BulkClientOptions(
-            index=self.index,
-            id_field=self.id_field,
-            batch_entries=self.batch_entries,
-        )
-        pid = TaskContext.get().partitionId()
-        ok_ids: list[int] = []
-        bad_ids: list[int] = []
-        chunk: list[dict] = []
-        mids: list[int] = []
-
-        def flush() -> None:
-            nonlocal chunk, mids
-            # strict input-order pairing: results[i] IS chunk[i] — the
-            # bulk_index_docs contract, which also RAISES on a
-            # truncated response (an unpaired tail would strand
-            # messages in flight, never acked, never nacked) — so msg
-            # ids pair positionally even when two in-flight duplicates
-            # share a uuid
-            results = bulk_index_docs(chunk, self.endpoint, opts)
-            for (rid, status, _err), mid in zip(results, mids):
-                (ok_ids if status < 300 else bad_ids).append(mid)
-            chunk, mids = [], []
-
-        for row in iterator:
-            d = {
-                k: _to_jsonable(v)
-                for k, v in row.asDict(recursive=True).items()
-            }
-            mid = d.pop("msg_id")
-            if d.get(self.id_field) is None:
-                bad_ids.append(mid)  # poison: straight to nack
-                continue
-            chunk.append(d)
-            mids.append(mid)
-            if len(chunk) >= self.batch_entries:
-                flush()
-        if chunk:
-            flush()
-        return EsBulkAckCommitMessage(pid, ok_ids, bad_ids)
-
-    def _post(self, path: str, msg_ids: list) -> None:
-        # the shared wire helper (one JSON-POST definition per package)
-        from go_pulsar_elasticsearch_spark.sources.es_bulk import _http
-
-        status, resp = _http(
-            self.broker_url,
-            path,
-            "POST",
-            {
-                "topic": self.topic,
-                "subscription": self.subscription,
-                "msg_ids": msg_ids,
-            },
-            timeout_s=30.0,
-        )
-        if status >= 300:
-            raise RuntimeError(f"broker {path} failed: {status} {resp}")
-
-    def commit(self, messages, batchId) -> None:
-        counted = [m for m in messages if m]
-        ok = [mid for m in counted for mid in m.ok_msg_ids]
-        bad = [mid for m in counted for mid in m.bad_msg_ids]
-        # manifest FIRST: a crash between manifest and acks replays the
-        # epoch, which re-posts (idempotent ids) and re-acks (broker
-        # no-ops on done messages)
-        os.makedirs(os.path.join(self.state_dir, "_commits"), exist_ok=True)
-        with open(
-            os.path.join(self.state_dir, "_commits", f"{batchId}.json"), "w"
-        ) as fh:
-            json.dump(
-                {
-                    "batch_id": batchId,
-                    "n_ok": len(ok),
-                    "n_failed": len(bad),
-                    "n_partitions": len(counted),
-                },
-                fh,
-            )
-        if ok:
-            self._post("/ack", ok)
-        if bad:
-            self._post("/nack", bad)
-
-
 class EsBulkBatchWriter(DataSourceWriter):
     """Batch twin (``df.write.format("es_bulk_sim")``): identical
     per-partition bulk path; the commit manifest lands under batch id 0
@@ -424,10 +303,6 @@ class EsBulkDataSource(DataSource):
         return "es_bulk_sim"
 
     def streamWriter(self, schema, overwrite) -> EsBulkStreamWriter:
-        # broker_url selects the broker-reconciling variant: the sink
-        # owns the ack/nack channel end over the wire (VERDICT r6 #2)
-        if "broker_url" in self.options:
-            return EsBulkAckStreamWriter(self.options)
         return EsBulkStreamWriter(self.options)
 
     def writer(self, schema, overwrite) -> EsBulkBatchWriter:
