@@ -14,9 +14,15 @@ new frame is materialized.  There is no lineage-keyed reuse — a frame
 rebuilt over a path that was rewritten in place has the same
 semantics as the old one, so reuse would hand back stale rows.  For
 lazy slots Spark's CacheManager already substitutes a persisted frame
-into any plan with the same result, so nothing is lost.  Evicting a
-frame a still-referenced plan uses is safe — Spark just recomputes it
-— so the turnover can never corrupt an earlier query, only uncache it.
+into any plan with the same result, so nothing is lost — and for the
+same reason the eviction must come BEFORE the new persist: over a path
+rewritten in place (outside Spark's own writer, which drops cached
+frames over the paths it writes), a still-registered occupant would be
+substituted into the new frame's plan and serve the old rows
+(tests/test_properties.py::test_slot_builders_see_in_place_rewrite).
+Evicting a frame a still-referenced plan uses is safe — Spark just
+recomputes it — so the turnover can never corrupt an earlier query,
+only uncache it.
 Frames persist MEMORY_AND_DISK so an oversized frame spills instead of
 evicting executor memory.
 
@@ -73,15 +79,41 @@ def checkpoint_slot(key: str, df: DataFrame) -> DataFrame:
     checkpoint runs the subtree ONCE at build time and every consumer
     references a LogicalRDD leaf.
 
-    Trade-offs vs cache_slot (why this is not the default): the build
-    is eager (no lazy composition; an explain-only caller pays the full
-    execution just to print a plan), the checkpointed blocks are
-    non-replicated executor state (a lost executor at cluster scale
-    forces a recompute-from-source restart of the query — acceptable
-    for intra-query intermediates, same failure domain as shuffle
-    files; SCALE.md), and the frame can no longer fuse with downstream
-    projections.  Block reclamation is GC-deferred (module-header
-    lifecycle note)."""
+    The cost: the build is eager — each slot runs its subtree as a
+    separate job, one after another, before Spark sees the whole plan —
+    the blocks are non-replicated executor state with no lineage (a lost
+    executor restarts the query; SCALE.md), and the frame cannot fuse
+    with downstream projections.  Block reclamation is GC-deferred
+    (module-header lifecycle note).  So a site stays eager only where a
+    measurement keeps it:
+
+    | slot key(s) | consumer | measurement |
+    |---|---|---|
+    | crawl_canon, crawl_corpus1 | crawl_corpus_pipeline | r8: 6.6 -> 3.4-4.4 s warm, 28 -> 13 s cold; canon is the Python WARC source scan |
+    | cc_edges_raw, cc_reps, cc_edges | connected_components | r8: dedup_components 2.35 -> 2.17 s |
+    | simhash_hashes, simhash_reps, simhash_members | _banded_hamming_pairs | r8: near_dedup_simhash_banded 5.26 -> 2.0-2.4 s (with the fused fingerprint) |
+    | minhash_ml_tf | near_dedup_minhash_ml | r9: 2.25 -> 1.24 s median |
+    | tfidf_weights | tfidf_doc_similarity | r8: 1.38 -> ~1.33 s, 4 consumers |
+    | lm2_cb | lm_bigram_perplexity | r8: counts only; checkpointing the bigram rows measured slower |
+    | kn_big, kn_cb | lm_kn_perplexity | r8: 1.96 -> 1.55 s |
+    | kl_source_word | kl_domain_divergence | r8: ~0.9 -> ~0.8 s |
+    | kmeans_base | lloyd_iterations | r8: kmeans_train 3.18 -> 2.16 s |
+    | ahash_words, afp_words, ahash_thumbs, phash_words | image/audio near-dup family | r8: image_ahash_neardup 1.31 -> ~1.0 s, audio_fingerprint_neardup 1.24 -> ~1.0 s; one Python decode pass per self-join |
+    | joint_dedup_edges | multimodal_dedup_keepbest | r8: 5.35 -> 3.56 s |
+    | pq_unit | pq_unit_vectors (ANN family) | r8: ann_pq 3.23 -> 1.68 s; r9 interleaved: ann_pq_stored 1.7-2.0 vs 2.4-2.5 s lazy |
+    | bbq_codes | ann_binary_hamming | r8: neutral (~1.2 s); one Python pass instead of two |
+    | matrix_stats_moments | matrix_stats_agg | r8: 1.66 -> ~1.35 s |
+    | runtime_prefilter_dim | join_runtime_prefilter | r8: 1.53 -> ~1.2 s |
+    | curation_kept; functions/prefix.py's ``_src`` and ranged slots | curation_pipeline, pack_sequences, late_data_profile, rfm_segmentation, crawl_corpus_pipeline | FLIPPED to cache_slot: perfbench batch-curation p50 3101 -> 2670 ms (10/10 pairs; 3506 -> 2314 with the gates moved above the dedup rank), traced build 2958 -> 480 ms and 14 -> 1 build jobs; pack_sequences 0.66 -> 0.74 s (IQR 0.15), late_data_profile 0.86 -> 0.83, rfm_segmentation 1.39 -> 1.36, crawl_corpus_pipeline 3.80 -> 3.60 |
+    | minhash_band_sigs | near-dup, graph and components family, crawl and curation pipelines, streaming near_dedup | FLIPPED to cache_slot; no consumer slower than eager by more than the eager IQR: near_dedup_minhash 1.49 -> 1.32 s, minhash_verify_jaccard 3.36 -> 2.79, minhash_recall_eval 2.96 -> 2.88, near_dedup_minhash_append 1.18 -> 1.22 (IQR 0.22), dedup_components 1.76 -> 1.88 (IQR 0.34), split_leakage_safe 1.78 -> 1.85 (IQR 0.17), graph_triangle_count 1.63 -> 1.65, graph_clustering_coeff 1.69 -> 1.75 (IQR 0.67), crawl_corpus_stream 2.77 -> 2.67 |
+
+    The r8/r9 figures are warm-rep medians on local[32] against the
+    former lineage-reuse lazy slot, not slot-cold re-measurements.  The
+    FLIPPED rows are eager -> lazy, measured on 4 cores: perfbench
+    medians over interleaved seeds, and slot-cold
+    ``tools/profile_query.py`` medians at sf0.1 (4 interleaved blocks
+    per side, warm reps 2-4; IQR of the eager side where the lazy side
+    reads slower)."""
     _evict(key)
     _slots[key] = df.localCheckpoint(eager=True)
     return _slots[key]

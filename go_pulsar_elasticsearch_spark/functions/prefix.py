@@ -18,8 +18,12 @@ Callers MUST include a unique tie-break in `order_exprs` when exact
 row order matters (row_number/ntile) — every certified query here does
 (the oracles carry the same tie-break).
 
-The ranged frame is slot-cached under `slot_key` (functions/caching.py)
-because both passes consume it; pass distinct keys per call site.
+The input and the ranged frame are lazily persisted under
+`slot_key + "_src"` and `slot_key` (`cache_slot`, functions/caching.py):
+the range sampling and the shuffle both read the input, and both passes
+read the ranged frame, so each is computed once — inside the caller's
+own action, so building a prefix frame launches no Spark job.  Pass
+distinct keys per call site.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from go_pulsar_elasticsearch_spark.functions.caching import checkpoint_slot
+from go_pulsar_elasticsearch_spark.functions.caching import cache_slot
 
 _N_PARTS = 16
 
@@ -38,8 +42,8 @@ def _ranged(df: DataFrame, order_exprs: list[Column], slot_key: str,
     # (once to sample range boundaries, once to shuffle), and chained
     # prefix calls would otherwise re-run the whole upstream lineage
     # for every sampling pass
-    src = checkpoint_slot(slot_key + "_src", df)
-    return checkpoint_slot(
+    src = cache_slot(slot_key + "_src", df)
+    return cache_slot(
         slot_key,
         src.repartitionByRange(n_parts, *order_exprs).withColumn(
             "_pid", F.spark_partition_id()
@@ -147,7 +151,7 @@ def global_ntile_multi(df: DataFrame, id_col: str,
     frame (≤ K·n_parts rows) broadcasts back; tiles pivot to one row
     per id and hash-join back onto the source (both sides already
     hash-partitioned by id from their groupBys)."""
-    src = checkpoint_slot(slot_key + "_src", df)
+    src = cache_slot(slot_key + "_src", df)
     arr = F.array(*[
         F.struct(F.lit(i).alias("_m"), k.cast("double").alias("_k"))
         for i, (_, k) in enumerate(cuts)
@@ -155,7 +159,7 @@ def global_ntile_multi(df: DataFrame, id_col: str,
     melted = src.select(F.col(id_col), F.explode(arr).alias("_mk")).select(
         id_col, F.col("_mk._m").alias("_m"), F.col("_mk._k").alias("_k")
     )
-    ranged = checkpoint_slot(
+    ranged = cache_slot(
         slot_key,
         melted.repartitionByRange(
             n_parts * len(cuts), "_m", "_k", id_col

@@ -12,10 +12,11 @@ compose):
                         running corpus total needed for budget cuts
 
 At 100 TB each gate is a narrow filter; the dedups are the only
-shuffles (hash groupBy + band-bucket join), and stage order puts the
-cheap selective filters first so the expensive stages see fewer rows —
-the same reasoning Catalyst applies to predicates, encoded at the
-pipeline level.
+shuffles (hash window + band-bucket join).  The gates are evaluated
+right after the exact-dedup rank, in the same stage: they depend only
+on the text, so gating before or after the exact dedup keeps the same
+docs, and evaluating them above the rank keeps the regex battery on
+every core instead of on the single-split scan (see the step-3 note).
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_pulsar_elasticsearch_spark.catalog import t
-from go_pulsar_elasticsearch_spark.functions.caching import checkpoint_slot
+from go_pulsar_elasticsearch_spark.functions.caching import cache_slot
 from go_pulsar_elasticsearch_spark.functions.prefix import global_running_sum
 from go_pulsar_elasticsearch_spark.llm.dedup import minhash_band_sigs
 from go_pulsar_elasticsearch_spark.llm.text_analysis import _BPE_RE, _MARKERS, _STOPWORDS_RE
@@ -86,8 +87,8 @@ FROM survivors
 @register("curation_pipeline", _CURATION_ORACLE)
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """quality -> lang -> exact-dedup -> near-dedup -> token budget, as
-    one composed DataFrame plan (Catalyst fuses the three narrow gates
-    into the scan; only the dedup stages shuffle)."""
+    one composed DataFrame plan; building it launches no Spark job
+    beyond the parquet schema read (every slot on the path is lazy)."""
     tune(spark)
     docs = t(spark, sf_dir, "documents").filter(F.length("text") > 0)
 
@@ -117,32 +118,38 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         k: F.size(F.regexp_extract_all("text", F.lit(pat), 0))
         for k, pat in _MARKERS.items()
     }
-    gated = docs.filter(
+    gate = (
         (quality >= 0.5)
         & (s["en"] > 0)
         & (s["en"] >= F.greatest(s["de"], s["fr"], s["es"]))
-    ).select("doc_id", "text")
+    )
 
     # 3. exact dedup: keep the lowest doc_id per content hash — a window
-    # rank instead of groupBy+self-join, so the regex-gated subtree is
-    # scanned once and the dedup costs exactly one shuffle (on the hash)
+    # rank instead of groupBy+self-join, so the scan is read once and
+    # the dedup costs exactly one shuffle (on the hash).  The gates are
+    # applied AFTER the rank: they read only the text, so every copy of
+    # a text passes or fails together and the result is the same as
+    # gating first.  Above the window Catalyst cannot push them into
+    # the scan, below the parallelism repair's repartition (catalog.t),
+    # where the regex battery ran in the scan's single task.
     hash_w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-    # kept feeds three consumers (both sides of the band self-join and
-    # the survivor anti-join); without a persist the regex-gated subtree
-    # is scanned three times.  MEMORY_AND_DISK spills instead of OOMing
-    # at scale — and a curated snapshot is exactly what a production
-    # corpus build materializes at this point anyway.
-    kept = checkpoint_slot(
+    # kept feeds two consumers (the band-signature build and the
+    # survivor anti-join); without a persist the regex-gated subtree is
+    # scanned twice.  The slot is a lazy MEMORY_AND_DISK persist, filled
+    # by the query's own action, so this build launches no job; it
+    # spills instead of OOMing at scale.
+    kept = cache_slot(
         "curation_kept",
-        gated.withColumn("_rk", F.row_number().over(hash_w))
-        .filter(F.col("_rk") == 1)
+        docs.select("doc_id", "text")
+        .withColumn("_rk", F.row_number().over(hash_w))
+        .filter((F.col("_rk") == 1) & gate)
         .drop("_rk"),
     )
 
     # 4. near-dup removal (MinHash bands, drop higher doc_id at >= 6/8)
-    # sigs is 8 small rows per doc but costs a shingle-explode + md5 +
-    # groupBy to build; the builder slot-caches it so the self-join's
-    # two sides share one materialization.
+    # sigs is 8 small rows per doc but costs a shingle split + 8 md5
+    # streams per doc to build; the builder slot-caches it so the
+    # self-join's two sides share one materialization.
     sigs = minhash_band_sigs(kept)
     a, b = sigs.alias("a"), sigs.alias("b")
     near_drop = (

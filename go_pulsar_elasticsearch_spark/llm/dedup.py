@@ -121,13 +121,13 @@ def minhash_band_sigs(docs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
     back with a groupBy exchange; this computes identical minima inside
     the scan stage.
 
-    Eagerly checkpointed (r9, VERDICT item 1): every consumer
-    self-joins the sig frame (both band-bucket sides), so the lazy
-    persist still paid Catalyst re-analysis of the shingle-array build
-    per reference AND 8 md5 streams per doc were recomputed on the
-    probe side of the first execution; the eager checkpoint runs the
-    build exactly once and every reference is a LogicalRDD leaf (guide
-    §3.3)."""
+    Lazily slot-cached (``cache_slot``): both band-bucket sides of a
+    consumer's self-join read one materialization, filled by the
+    consumer's own action, so it adds no job to a consumer's build.  r9
+    had made it an eager checkpoint on warm-rep A/Bs against the former
+    lineage-reuse slot; slot-cold interleaved A/Bs of every consumer
+    show none slower than with the eager checkpoint by more than the
+    eager side's IQR (numbers in functions/caching.py)."""
     arrs = doc_shingle_arrays(docs)
     extra = [c for c in arrs.columns if c == "cnt"]
     sig_cols = [
@@ -138,7 +138,7 @@ def minhash_band_sigs(docs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
     ]
     wide = arrs.select("doc_id", *extra, *sig_cols)
     stack_args = ", ".join(f"{b}, sig{b}" for b in range(n_bands))
-    return checkpoint_slot(
+    return cache_slot(
         "minhash_band_sigs",
         wide.select(
             "doc_id",

@@ -259,8 +259,10 @@ def _asof_merge(purchases: pd.DataFrame, views: pd.DataFrame) -> pd.DataFrame:
     ONE np.lexsort over the concatenated (view, purchase) key arrays
     orders both sides at once; a cumulative count of views along that
     order gives, per purchase, how many view keys sort strictly below
-    its own (user_id, ts, event_id) — event_ids are unique, so no
-    full-key tie exists and "below" is exactly "strictly preceding".
+    its own (user_id, ts, event_id).  A side key below event_id sorts a
+    purchase before a view with the same full key, so a tied view is
+    never counted as "strictly preceding" even if event_ids collide
+    across the two sides.
     The latest preceding view for the SAME user is then view k-1
     whenever that view's user matches.  No per-purchase Python loop:
     an earlier version refined each purchase with two tiny
@@ -295,6 +297,7 @@ def _asof_merge(purchases: pd.DataFrame, views: pd.DataFrame) -> pd.DataFrame:
         nv = len(vu)
         order = np.lexsort(
             (
+                np.concatenate([np.ones(nv, "int8"), np.zeros(len(pu), "int8")]),
                 np.concatenate([vi, pi]),
                 np.concatenate([vm, pm]),
                 np.concatenate([vu, pu]),

@@ -18,10 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_pulsar_elasticsearch_spark.catalog import register_views, t
-from go_pulsar_elasticsearch_spark.functions.caching import (
-    cache_slot,
-    checkpoint_slot,
-)
+from go_pulsar_elasticsearch_spark.functions.caching import cache_slot
 from go_pulsar_elasticsearch_spark.functions.exact import AVGD, SUMD, davg, dsum
 from go_pulsar_elasticsearch_spark.registry import register
 from go_pulsar_elasticsearch_spark.session import tune

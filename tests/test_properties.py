@@ -3,6 +3,9 @@ the properties hold for ANY input, not just the fixtures."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -212,29 +215,97 @@ def test_cache_slot_bounds_live_frames(spark):
         assert df2.count() == 20
 
 
-def test_minhash_band_sigs_sees_in_place_rewrite(spark, tmp_path):
-    """A parquet path rewritten in place yields a new frame with the
-    SAME plan semantics as the old one, so a lineage-keyed slot would
-    hand back the stale occupant: the second build must read the new
-    rows."""
+def _rewrite_build(build: str, spark, path: str):
+    """One of the slot-backed builders over a documents.parquet copy
+    under ``path``; every output carries doc_id."""
+    from go_pulsar_elasticsearch_spark.functions.prefix import (
+        global_running_sum,
+    )
+    from go_pulsar_elasticsearch_spark.llm.curation import curation_pipeline
     from go_pulsar_elasticsearch_spark.llm.dedup import minhash_band_sigs
 
-    p = str(tmp_path / "docs.parquet")
-    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.read.parquet(os.path.join(path, "documents.parquet"))
+    if build == "minhash_band_sigs":
+        return minhash_band_sigs(docs)
+    if build == "global_running_sum":
+        return global_running_sum(
+            docs.select("doc_id", "n_chars"), [F.col("doc_id")],
+            "n_chars", "running_chars", "_test_rewrite_prefix",
+        )
+    return curation_pipeline(spark, path)
 
-    def write(ids):
-        spark.createDataFrame(
-            [(i, text) for i in ids], "doc_id long, text string"
-        ).write.mode("overwrite").parquet(p)
 
-    def ids():
-        sigs = minhash_band_sigs(spark.read.parquet(p))
-        return sorted({r["doc_id"] for r in sigs.collect()})
+@pytest.mark.parametrize(
+    "build", ["minhash_band_sigs", "global_running_sum", "curation_pipeline"]
+)
+def test_slot_builders_see_in_place_rewrite(spark, sf_dir, tmp_path, build):
+    """A parquet path rewritten in place yields a new frame with the
+    SAME plan semantics as the old one.  A lazy slot registers its
+    frame in Spark's CacheManager, which would substitute the old
+    occupant into the new plan, so slot turnover must evict the old
+    frame before the new one is persisted: the second build must read
+    the new rows (here: the same documents with shifted doc_ids).  The
+    rewrite goes through pyarrow, not Spark's writer, because Spark's
+    overwrite itself drops cached frames over the path it writes."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    write([1, 2])
-    assert ids() == [1, 2]
-    write([7, 8, 9])
-    assert ids() == [7, 8, 9]
+    from go_pulsar_elasticsearch_spark.functions.caching import (
+        release_all_slots,
+    )
+
+    shift = 1_000_000
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+
+    def rows(offset):
+        pq.write_table(
+            src.set_column(
+                src.schema.get_field_index("doc_id"), "doc_id",
+                pc.add(src["doc_id"], offset),
+            ),
+            str(tmp_path / "documents.parquet"),
+        )
+        df = _rewrite_build(build, spark, str(tmp_path))
+        return sorted(
+            (r["doc_id"] - offset, *r[1:]) for r in df.select(
+                "doc_id", *[c for c in df.columns if c != "doc_id"]
+            ).collect()
+        )
+
+    try:
+        first = rows(0)
+        assert first
+        assert rows(shift) == first
+    finally:
+        release_all_slots()
+
+
+def test_curation_build_is_lazy(spark, sf_dir):
+    """Building curation_pipeline returns a plan without running it:
+    no checkpoint leaf in the plan, and no build job other than Spark's
+    parquet schema read."""
+    from go_pulsar_elasticsearch_spark.functions.caching import (
+        release_all_slots,
+    )
+    from go_pulsar_elasticsearch_spark.llm.curation import curation_pipeline
+
+    sc = spark.sparkContext
+    release_all_slots()
+    group = "test-curation-build-is-lazy"
+    sc.setJobGroup(group, "curation build")
+    try:
+        df = curation_pipeline(spark, sf_dir)
+        plan = df._jdf.queryExecution().toString()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_all_slots()
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+    assert len(jobs) <= 1, f"{len(jobs)} build jobs"
+    for j in jobs:
+        for s in tracker.getJobInfo(j).stageIds:
+            assert tracker.getStageInfo(s).name.startswith("parquet at ")
 
 
 _avro_text = st.text(

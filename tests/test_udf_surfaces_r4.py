@@ -165,6 +165,33 @@ def test_asof_merge_matches_bruteforce():
             assert int(row["ms_since_view"]) == pms - best[0]
 
 
+def test_asof_merge_full_key_tie_is_not_preceding():
+    """A view whose (user_id, ts, event_id) equals the purchase's is not
+    strictly preceding it: the purchase keeps the earlier view."""
+    import pandas as pd
+
+    from go_pulsar_elasticsearch_spark.llm.udfs import _asof_merge
+
+    def frame(rows):
+        return pd.DataFrame(
+            {
+                "user_id": [u for u, _, _ in rows],
+                "event_id": [e for _, e, _ in rows],
+                "ts": pd.Series(
+                    [datetime.datetime(2024, 1, 1, 0, 0, s) for _, _, s in rows],
+                    dtype="datetime64[us]",
+                ),
+            }
+        )
+
+    base = 1704067200000  # 2024-01-01T00:00:00Z
+    out = _asof_merge(
+        frame([(1, 5, 10)]), frame([(1, 3, 2), (1, 5, 10)])
+    ).set_index("purchase_id")
+    assert int(out.loc[5, "asof_view_ms"]) == base + 2000
+    assert int(out.loc[5, "ms_since_view"]) == 8000
+
+
 def test_cogrouped_asof_plan_is_cogroup(spark, sf_dir):
     plan = _formatted(spark, QUERIES["udf_cogrouped_asof"](spark, sf_dir))
     assert "FlatMapCoGroupsInPandas" in plan

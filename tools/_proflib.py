@@ -22,8 +22,15 @@ def noop(df):
 
 
 def rep(fn, n=4, label=""):
+    """Time ``n`` slot-cold reps of ``fn``: every slot is released
+    before each rep, outside the timed region (like bench.py)."""
+    from go_pulsar_elasticsearch_spark.functions.caching import (
+        release_all_slots,
+    )
+
     ts = []
     for _ in range(n):
+        release_all_slots()
         t0 = time.time()
         noop(fn())
         ts.append(round(time.time() - t0, 3))
