@@ -22,6 +22,7 @@ Both paths produce the same output schema, so the downstream pipeline
 
 from __future__ import annotations
 
+import io
 import json
 
 from pyspark.sql import DataFrame
@@ -93,21 +94,49 @@ _DECODED_SCHEMA = (
 )
 
 
+def decode_strict(payload: bytes | None, schema, reader=None) -> dict | None:
+    """One Avro payload -> its record, or None when it is not exactly
+    one datum: a NULL payload, any codec error (truncated varint or
+    string, bad union index, invalid UTF-8) and trailing bytes after
+    the decoded record all give None (-> DLQ).  Strictness is
+    deliberate: trailing bytes mean a framing bug upstream, and
+    surfacing it in the DLQ beats silently truncating.  ``schema`` is
+    a parsed writer schema; with a parsed ``reader`` the datum is
+    resolved writer -> reader (avro_codec.decode_resolved).  The one
+    definition of the PERMISSIVE/STRICT rule for every Python decode
+    site: _decode_avro_pandas, decode_avro_resolved and the delivery
+    stream's epoch pass."""
+    if payload is None:
+        return None
+    buf = io.BytesIO(payload)
+    try:
+        if reader is None:
+            rec = avro_codec.decode(schema, buf)
+        else:
+            rec = avro_codec.decode_resolved(schema, reader, buf)
+    except Exception:
+        return None
+    return rec if buf.read(1) == b"" else None
+
+
 def decode_avro_payload(raw: DataFrame, value_col: str = "value",
                         schema_json: str = INGESTION_AVRO_SCHEMA,
                         passthrough: tuple[str, ...] = ()) -> DataFrame:
     """R3: binary Avro -> typed columns, PERMISSIVE (undecodable rows get
     a null struct and flow to the DLQ split, matching main.go:131-143).
+    Callers: the hand-rolled delivery loop (operators/pulsar_loop.py)
+    and the ``decode_avro`` certification query.  The delivery stream
+    does not call it: its epoch decodes with decode_strict in the same
+    Arrow pass that posts `_bulk` (sources/pulsar_stream.py).
 
     Prefers the spark-avro JVM path; falls back to the pure-spec
     Python codec behind mapInPandas when the jar is absent.  Output
     schema is identical on both paths.  One documented null-semantics
-    divergence: the Python fallback is STRICT about trailing bytes
-    after the decoded record (nulls the row -> DLQ), while from_avro
-    decodes the datum and ignores trailing bytes — a payload with
-    trailing garbage DLQs on the fallback path but indexes on the JVM
-    path.  Strictness is deliberate: trailing bytes mean a framing bug
-    upstream, and surfacing it in the DLQ beats silently truncating.
+    divergence: the Python fallback is STRICT (decode_strict) about
+    trailing bytes after the decoded record (nulls the row -> DLQ),
+    while from_avro decodes the datum and ignores trailing bytes — a
+    payload with trailing garbage DLQs on the fallback path but
+    indexes on the JVM path.
 
     ``passthrough`` columns ride through the decode untouched (e.g. a
     broker message id the delivery loop acks/nacks by)."""
@@ -131,11 +160,9 @@ def decode_avro_payload(raw: DataFrame, value_col: str = "value",
 def _decode_avro_pandas(raw: DataFrame, value_col: str,
                         schema_json: str,
                         passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """Arrow-batched decode of real Avro binary via the pure-spec codec.
-    STRICT per datum: trailing bytes after a decoded record, truncated
-    varints, or bad union indices null the row (-> DLQ)."""
-    import io
-
+    """Arrow-batched decode of real Avro binary via the pure-spec codec,
+    STRICT per datum (decode_strict): an undecodable payload nulls the
+    row (-> DLQ)."""
     schema = avro_codec.parse_schema(schema_json)
     by_name = {f.name: f for f in raw.schema.fields}
     pt_ddl = "".join(
@@ -150,15 +177,7 @@ def _decode_avro_pandas(raw: DataFrame, value_col: str,
             rows = []
             extras_cols = [pdf[c] for c in passthrough]
             for val, *extras in zip(pdf[value_col], *extras_cols):
-                rec = None
-                if val is not None:
-                    try:
-                        buf = io.BytesIO(bytes(val))
-                        cand = avro_codec.decode(schema, buf)
-                        if buf.read(1) == b"":  # no trailing garbage
-                            rec = cand
-                    except Exception:
-                        rec = None
+                rec = decode_strict(val, schema)
                 if rec is None:
                     rows.append((bytes(val) if val is not None else None,
                                  None, None, None, None, None, None,
@@ -345,8 +364,6 @@ def decode_avro_resolved(raw: DataFrame, writer_json: str, reader_json: str,
     (With the spark-avro jar present the JVM path would be from_avro's
     ``avroSchema`` writer-schema option; this container has no jar, so
     the resolution path is the Python codec on both branches.)"""
-    import io
-
     writer = avro_codec.parse_schema(writer_json)
     reader = avro_codec.parse_schema(reader_json)
 
@@ -363,15 +380,7 @@ def decode_avro_resolved(raw: DataFrame, writer_json: str, reader_json: str,
         for pdf in it:
             rows = []
             for val in pdf[value_col]:
-                rec = None
-                if val is not None:
-                    try:
-                        buf = io.BytesIO(bytes(val))
-                        cand = avro_codec.decode_resolved(writer, reader, buf)
-                        if buf.read(1) == b"":
-                            rec = cand
-                    except Exception:
-                        rec = None
+                rec = decode_strict(val, writer, reader)
                 if rec is None:
                     rows.append((None,) * 7)
                 else:

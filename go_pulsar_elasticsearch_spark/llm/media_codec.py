@@ -31,6 +31,8 @@ import math
 import struct
 import zlib
 
+import numpy as _np
+
 
 class MediaFormatError(ValueError):
     """Payload does not parse as the claimed container format."""
@@ -797,15 +799,10 @@ _JPEG_SCALE = [
 _JPEG_SCALE[0][0] = 0.125  # exact: float (1/sqrt 2)**2 is 0.5 + 1 ulp
 
 
-try:  # vectorized FDCT (r8 opt) — numpy ships with pyspark's deps
-    import numpy as _np
-
-    _JPEG_COS_NP = _np.array(_JPEG_COS)          # C[u, x]
-    _JPEG_SCALE_NP = _np.array(_JPEG_SCALE)      # S[u, v]
-    _ZIGZAG_U = _np.array([u for u, _ in _ZIGZAG])
-    _ZIGZAG_V = _np.array([v for _, v in _ZIGZAG])
-except Exception:  # pragma: no cover - numpy always present under Spark
-    _np = None
+_JPEG_COS_NP = _np.array(_JPEG_COS)          # C[u, x]
+_JPEG_SCALE_NP = _np.array(_JPEG_SCALE)      # S[u, v]
+_ZIGZAG_U = _np.array([u for u, _ in _ZIGZAG])
+_ZIGZAG_V = _np.array([v for _, v in _ZIGZAG])
 
 
 def _fdct_quant(block: list[list[int]], qtab: list[int]) -> list[int]:
@@ -823,31 +820,13 @@ def _fdct_quant(block: list[list[int]], qtab: list[int]) -> list[int]:
     either association and quantize to 0 with any q >= 1.  For
     non-constant blocks an AC coefficient may differ by 1 ulp before
     rounding, which the lossy-roundtrip error-bound tests cover."""
-    if _np is not None:
-        b = _np.asarray(block, dtype=_np.float64)
-        m = _JPEG_COS_NP @ b @ _JPEG_COS_NP.T          # m[v, u] = s(u, v)
-        f = (_JPEG_SCALE_NP * m.T)[_ZIGZAG_U, _ZIGZAG_V]
-        q = _np.asarray(qtab, dtype=_np.float64)
-        out = _np.floor(_np.abs(f) / q + 0.5)
-        _np.copysign(out, f, out=out)
-        return [int(v) for v in out]
-    out = [0] * 64
-    for k, (u, v) in enumerate(_ZIGZAG):
-        cu, cv = _JPEG_COS[u], _JPEG_COS[v]
-        s = 0.0
-        for y in range(8):
-            row = block[y]
-            cvy = cv[y]
-            for x in range(8):
-                s += row[x] * cu[x] * cvy
-        f = _JPEG_SCALE[u][v] * s
-        q = qtab[k]
-        out[k] = (
-            int(math.floor(f / q + 0.5))
-            if f >= 0
-            else -int(math.floor(-f / q + 0.5))
-        )
-    return out
+    b = _np.asarray(block, dtype=_np.float64)
+    m = _JPEG_COS_NP @ b @ _JPEG_COS_NP.T          # m[v, u] = s(u, v)
+    f = (_JPEG_SCALE_NP * m.T)[_ZIGZAG_U, _ZIGZAG_V]
+    q = _np.asarray(qtab, dtype=_np.float64)
+    out = _np.floor(_np.abs(f) / q + 0.5)
+    _np.copysign(out, f, out=out)
+    return [int(v) for v in out]
 
 
 def _fdct_quant_plane(
@@ -861,11 +840,6 @@ def _fdct_quant_plane(
     per-block _fdct_quant numpy path performs (np.matmul on a stacked
     operand runs the same 8x8 GEMM per block), asserted block-for-block
     in tests/test_jpeg_codec.py."""
-    if _np is None:  # pragma: no cover - numpy always present
-        return [
-            _fdct_quant(b, qtab)
-            for b in _jpeg_component_blocks(plane, width, height)
-        ]
     p = _np.asarray(plane, dtype=_np.float64)
     hpad = (-height) % 8
     wpad = (-width) % 8
@@ -891,30 +865,14 @@ def _idct_block(coefs: list[int], qtab: list[int]) -> list[list[int]]:
     whose one-term sum is association-free, so decoded values on the
     oracle path are bit-identical; multi-coefficient blocks (lossy
     roundtrip tests) tolerate the ulp-level association change."""
-    if _np is not None:
-        deq = _np.zeros((8, 8))
-        c = _np.asarray(coefs, dtype=_np.float64) * _np.asarray(
-            qtab, dtype=_np.float64
-        )
-        deq[_ZIGZAG_U, _ZIGZAG_V] = _JPEG_SCALE_NP[_ZIGZAG_U, _ZIGZAG_V] * c
-        m = _JPEG_COS_NP.T @ deq @ _JPEG_COS_NP  # m[x, y]
-        px = _np.clip(_np.floor(m.T + 128.5), 0, 255).astype(_np.int64)
-        return [[int(v) for v in row] for row in px]
-    deq = [[0.0] * 8 for _ in range(8)]
-    for k, (u, v) in enumerate(_ZIGZAG):
-        if coefs[k]:
-            deq[u][v] = _JPEG_SCALE[u][v] * (coefs[k] * qtab[k])
-    nz = [
-        (u, v, deq[u][v]) for u in range(8) for v in range(8) if deq[u][v]
-    ]
-    out = [[0] * 8 for _ in range(8)]
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for u, v, d in nz:
-                s += d * _JPEG_COS[u][x] * _JPEG_COS[v][y]
-            out[y][x] = min(max(int(math.floor(s + 128.5)), 0), 255)
-    return out
+    deq = _np.zeros((8, 8))
+    c = _np.asarray(coefs, dtype=_np.float64) * _np.asarray(
+        qtab, dtype=_np.float64
+    )
+    deq[_ZIGZAG_U, _ZIGZAG_V] = _JPEG_SCALE_NP[_ZIGZAG_U, _ZIGZAG_V] * c
+    m = _JPEG_COS_NP.T @ deq @ _JPEG_COS_NP  # m[x, y]
+    px = _np.clip(_np.floor(m.T + 128.5), 0, 255).astype(_np.int64)
+    return [[int(v) for v in row] for row in px]
 
 
 # ---- optimized Huffman tables (Annex K.2: the pseudo-symbol-256 merge

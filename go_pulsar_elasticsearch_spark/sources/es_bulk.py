@@ -97,16 +97,21 @@ def _to_jsonable(v):
     return v
 
 
+def _ndjson_pair(doc: dict, index: str, id_field: str) -> bytes:
+    """One document's `_bulk` lines: the `index` action line (op type
+    `index` = last-write-wins upsert, es.go:186) and the source line,
+    each newline-terminated."""
+    action = json.dumps(
+        {"index": {"_index": index, "_id": doc[id_field]}},
+        separators=(",", ":"))
+    source = json.dumps(doc, separators=(",", ":"))
+    return f"{action}\n{source}\n".encode("utf-8")
+
+
 def docs_to_ndjson(docs: Iterable[dict], index: str, id_field: str) -> bytes:
-    """The `_bulk` body: one `index` action line (op type `index` =
-    last-write-wins upsert, es.go:186) + one source line per document."""
-    lines = []
-    for doc in docs:
-        lines.append(json.dumps(
-            {"index": {"_index": index, "_id": doc[id_field]}},
-            separators=(",", ":")))
-        lines.append(json.dumps(doc, separators=(",", ":")))
-    return ("\n".join(lines) + "\n").encode("utf-8")
+    """The `_bulk` body: one action line + one source line per
+    document."""
+    return b"".join(_ndjson_pair(doc, index, id_field) for doc in docs)
 
 
 def bulk_post(endpoint: str, body: bytes, opts: BulkClientOptions,
@@ -175,14 +180,11 @@ def bulk_index_docs(docs: list[dict], endpoint: str, opts: BulkClientOptions,
     owner enforces it once, so no caller can silently mis-pair (an
     unpaired tail would under-count or strand messages in flight)."""
     out: list[tuple[str, int, str | None]] = []
-    chunk: list[dict] = []
+    chunk: list[bytes] = []  # each document's encoded action+source pair
     chunk_bytes = 0
 
-    def post(batch: list[dict]) -> None:
-        resp = bulk_post(
-            endpoint, docs_to_ndjson(batch, opts.index, opts.id_field),
-            opts, sleep,
-        )
+    def post(batch: list[bytes]) -> None:
+        resp = bulk_post(endpoint, b"".join(batch), opts, sleep)
         items = list(parse_bulk_items(resp))
         if len(items) != len(batch):
             raise BulkTransportError(
@@ -193,13 +195,15 @@ def bulk_index_docs(docs: list[dict], endpoint: str, opts: BulkClientOptions,
         out.extend(items)
 
     for doc in docs:
-        size = len(json.dumps(doc, separators=(",", ":"))) + 64
+        # encoded once: the body is the join of these very bytes, so
+        # the byte bound counts the real action line, ids included
+        pair = _ndjson_pair(doc, opts.index, opts.id_field)
         if chunk and (len(chunk) >= opts.batch_entries
-                      or chunk_bytes + size > opts.batch_bytes):
+                      or chunk_bytes + len(pair) > opts.batch_bytes):
             post(chunk)
             chunk, chunk_bytes = [], 0
-        chunk.append(doc)
-        chunk_bytes += size
+        chunk.append(pair)
+        chunk_bytes += len(pair)
     if chunk:
         post(chunk)
     return out

@@ -9,7 +9,7 @@ reference implementation).  The two drivers reconcile with the same
 rules (ack on a 2xx item, nack on a failed item or a poison row, msg
 ids paired positionally with bulk results) but through separate code:
 the loop's ``index_and_reconcile`` collects outcomes from a bulk
-DataFrame, the stream's epoch from one ``mapPartitions`` job.
+DataFrame, the stream's epoch from one ``mapInArrow`` job.
 
 Process topology (discovered the hard way): Spark runs a Python
 streaming source's ``read()`` in a SEPARATE worker process
@@ -18,12 +18,14 @@ cannot share memory with a test-local broker object.  The consume
 channel therefore crosses a real process boundary over HTTP
 (pulsar_mock_broker.make_broker_server), exactly like a production
 consumer talking to a broker service.  Each epoch runs ONE Spark job
-whose tasks post ``_bulk`` executor-side and return only per-message
-outcomes; the driver then writes the epoch manifest and acks/nacks
-over the same wire — the reference's split (consumer channel in,
-acks out, main.go:250-282).  foreachBatch, not a Python DataSource
-sink: the sink paid two Python planner processes per epoch (writer
-build and commit), which dominated the per-trigger cost.
+over the raw ``(msg_id, value)`` micro-batch; each of its tasks runs
+ONE Python worker, a ``mapInArrow`` pass that decodes the Avro
+payloads and posts ``_bulk`` executor-side, returning only
+per-message outcomes.  The driver then writes the epoch manifest and
+acks/nacks over the same wire — the reference's split (consumer
+channel in, acks out, main.go:250-282).  foreachBatch, not a Python
+DataSource sink: the sink paid two Python planner processes per epoch
+(writer build and commit), which dominated the per-trigger cost.
 
 Replay discipline (what makes a mid-drain kill/restart safe):
 
@@ -70,6 +72,8 @@ _SCHEMA = StructType(
         StructField("value", BinaryType()),
     ]
 )
+
+_EPOCH_SCHEMA = "ok array<bigint>, bad array<bigint>"
 
 _MAX_IDLE_ADVANCES = 10_000
 _BATCH_ENTRIES = 500  # docs per `_bulk` request
@@ -238,21 +242,32 @@ def _reconcile_stranded(broker_url: str, topic: str, subscription: str,
 # ------------------------------------------------------------------ sink
 
 
-def _post_partition(endpoint: str, index: str):
-    """The executor half of a delivery epoch: post one partition's docs
-    in ``_bulk`` chunks and yield ONE (ok_msg_ids, bad_msg_ids) pair —
-    batch-bounded metadata (msg_id longs only), the same bound as the
-    reference's in-memory message handles.  Poison rows (uuid NULL,
-    undecodable payloads) are never posted; their msg_ids go straight
-    to the nack list, the certified loop's escalator (main.go:131-143)."""
+def _epoch_pass(endpoint: str, index: str):
+    """The executor half of a delivery epoch, one ``mapInArrow`` pass
+    over the raw ``(msg_id, value)`` micro-batch: decode each payload
+    (ingest.avro.decode_strict), post the docs in ``_bulk`` chunks, and
+    yield ONE ``(ok, bad)`` row of msg ids per partition — batch-bounded
+    metadata (msg_id longs only), the same bound as the reference's
+    in-memory message handles.  Decode and post share the one Python
+    worker, as parseMsg feeds the bulk indexer in-process in the
+    reference (main.go:145-158, es.go:160-213).  Poison (undecodable
+    payloads, a NULL uuid) is never posted; its msg ids go straight to
+    the nack list, the certified loop's escalator (main.go:131-143)."""
 
-    def post(rows):
+    def run(batches):
+        import pyarrow as pa
+
+        from go_pulsar_elasticsearch_spark.ingest.avro import (
+            INGESTION_AVRO_SCHEMA,
+            avro_codec,
+            decode_strict,
+        )
         from go_pulsar_elasticsearch_spark.sources.es_bulk import (
             BulkClientOptions,
-            _to_jsonable,
             bulk_index_docs,
         )
 
+        schema = avro_codec.parse_schema(INGESTION_AVRO_SCHEMA)
         opts = BulkClientOptions(
             index=index, id_field="uuid", batch_entries=_BATCH_ENTRIES
         )
@@ -274,24 +289,28 @@ def _post_partition(endpoint: str, index: str):
             chunk.clear()
             mids.clear()
 
-        for row in rows:
-            d = {
-                k: _to_jsonable(v)
-                for k, v in row.asDict(recursive=True).items()
-            }
-            mid = d.pop("msg_id")
-            if d.get("uuid") is None:
-                bad_ids.append(mid)  # poison: straight to nack
-                continue
-            chunk.append(d)
-            mids.append(mid)
-            if len(chunk) >= _BATCH_ENTRIES:
-                flush()
+        for batch in batches:
+            for mid, value in zip(
+                batch.column("msg_id").to_pylist(),
+                batch.column("value").to_pylist(),
+            ):
+                doc = decode_strict(value, schema)
+                if doc is None or doc["uuid"] is None:
+                    bad_ids.append(mid)  # poison: straight to nack
+                    continue
+                chunk.append(doc)
+                mids.append(mid)
+                if len(chunk) >= _BATCH_ENTRIES:
+                    flush()
         if chunk:
             flush()
-        yield ok_ids, bad_ids
+        ids = pa.list_(pa.int64())
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([ok_ids], ids), pa.array([bad_ids], ids)],
+            names=["ok", "bad"],
+        )
 
-    return post
+    return run
 
 
 def _delivery_epoch(endpoint: str, index: str, broker_url: str, topic: str,
@@ -304,11 +323,11 @@ def _delivery_epoch(endpoint: str, index: str, broker_url: str, topic: str,
     idempotent, es.go:186) and re-acks (the broker ignores done
     messages); a failed job acks nothing and fails the query, whose
     restart replays the epoch from the spool."""
-    post = _post_partition(endpoint, index)
+    run = _epoch_pass(endpoint, index)
     commits = os.path.join(state_dir, "_commits")
 
     def epoch(df, batch_id: int) -> None:
-        parts = df.rdd.mapPartitions(post).collect()
+        parts = df.mapInArrow(run, _EPOCH_SCHEMA).collect()
         ok = [mid for oks, _bad in parts for mid in oks]
         bad = [mid for _ok, bads in parts for mid in bads]
         os.makedirs(commits, exist_ok=True)
@@ -355,22 +374,15 @@ def start_delivery_stream(
     stop/drain):
 
         readStream.format("pulsar_broker_sim")        consume channel
-          -> decode_avro_payload (engine transform)
           -> foreachBatch(_delivery_epoch)            produce channel
-             (one executor job posts `_bulk`; the driver writes the
-             manifest, then acks/nacks over the broker wire)
+             (one executor job decodes and posts `_bulk` in one Arrow
+             pass; the driver writes the manifest, then acks/nacks
+             over the broker wire)
 
     Both channel ends talk to the broker over its HTTP wire — the
     reference's two channels (main.go:250-282), with no broker object
     closed over anywhere in the query.  Per-epoch commit manifests land
     under ``state_dir``/_commits."""
-    from go_pulsar_elasticsearch_spark.ingest.avro import (
-        decode_avro_payload,
-    )
-    from go_pulsar_elasticsearch_spark.operators.pulsar_loop import (
-        _DOC_COLS,
-    )
-
     os.makedirs(spool_dir, exist_ok=True)
     state_dir = state_dir or tempfile.mkdtemp(prefix="gpe-sinkstate-")
     _reconcile_stranded(broker_url, topic, subscription, spool_dir)
@@ -385,18 +397,12 @@ def start_delivery_stream(
         .option("spool_dir", spool_dir)
         .load()
     )
-    # poison rows (uuid NULL after the PERMISSIVE decode) stay in the
-    # frame: the epoch routes them to nack without posting — the same
-    # escalator as the certified loop (main.go:131-143)
-    decoded = decode_avro_payload(stream, passthrough=("msg_id",)).select(
-        *_DOC_COLS, "msg_id"
-    )
     epoch = _delivery_epoch(
         endpoint, index, broker_url.rstrip("/"), topic, subscription,
         state_dir,
     )
     return (
-        decoded.writeStream.foreachBatch(epoch)
+        stream.writeStream.foreachBatch(epoch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime="0 seconds")
         .start()

@@ -136,6 +136,36 @@ def test_chunking_by_entries(spark, mock_es):
     assert sorted(r["n_items"] for r in state.bulk_requests) == [1, 2, 2]
 
 
+def test_byte_bound_counts_real_action_lines(mock_es, monkeypatch):
+    """The 5 MB FlushBytes analog (es.go:166) bounds the real body: with
+    36-char uuid doc ids each action line is 79 bytes, and no posted body
+    may exceed ``batch_bytes`` however the ids grow the action lines."""
+    import uuid as uuidlib
+
+    from go_pulsar_elasticsearch_spark.sources import es_bulk
+
+    state, url = mock_es
+    bodies: list[bytes] = []
+    real_post = es_bulk.bulk_post
+
+    def recording_post(endpoint, body, opts, sleep=None):
+        bodies.append(body)
+        return real_post(endpoint, body, opts)
+
+    monkeypatch.setattr(es_bulk, "bulk_post", recording_post)
+    docs = [
+        {"uuid": str(uuidlib.UUID(int=i)), "name": f"name-{i:04d}"}
+        for i in range(200)
+    ]
+    opts = BulkClientOptions(index="index_data", batch_bytes=2000)
+    results = es_bulk.bulk_index_docs(docs, url, opts)
+    assert [r[0] for r in results] == [d["uuid"] for d in docs]
+    assert len(bodies) > 1
+    assert max(len(b) for b in bodies) <= opts.batch_bytes
+    assert b"".join(bodies) == docs_to_ndjson(docs, "index_data", "uuid")
+    assert len(state.docs) == len(docs)
+
+
 def test_redelivery_collapses_last_write_wins(spark, mock_es, tmp_path):
     state, url = mock_es
     dlq = str(tmp_path / "dlq")
