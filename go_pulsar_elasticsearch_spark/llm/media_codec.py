@@ -856,25 +856,6 @@ def _fdct_quant_plane(
     return out.astype(_np.int64).tolist()
 
 
-def _idct_block(coefs: list[int], qtab: list[int]) -> list[list[int]]:
-    """Dequantize + inverse DCT -> 8x8 pixel block (level-shifted back,
-    clamped).  Reconstruction rounding is floor(v + 128.5).
-
-    Vectorized like _fdct_quant (out[y][x] = (Cᵀ·deq·C)[x,y]); the
-    certified mosaic's blocks carry a single nonzero (DC) coefficient,
-    whose one-term sum is association-free, so decoded values on the
-    oracle path are bit-identical; multi-coefficient blocks (lossy
-    roundtrip tests) tolerate the ulp-level association change."""
-    deq = _np.zeros((8, 8))
-    c = _np.asarray(coefs, dtype=_np.float64) * _np.asarray(
-        qtab, dtype=_np.float64
-    )
-    deq[_ZIGZAG_U, _ZIGZAG_V] = _JPEG_SCALE_NP[_ZIGZAG_U, _ZIGZAG_V] * c
-    m = _JPEG_COS_NP.T @ deq @ _JPEG_COS_NP  # m[x, y]
-    px = _np.clip(_np.floor(m.T + 128.5), 0, 255).astype(_np.int64)
-    return [[int(v) for v in row] for row in px]
-
-
 # ---- optimized Huffman tables (Annex K.2: the pseudo-symbol-256 merge
 # producing code LENGTHS, the 16-bit cap adjustment, canonical codes)
 
@@ -1356,9 +1337,10 @@ def decode_jpeg_planes(data: bytes):
     r9 restructure (guide §4.2): the entropy decode is inherently
     sequential (Huffman + DC prediction) and stays a Python walk, but
     it now only FILLS a coefficient matrix; the IDCT runs ONCE per
-    component as a batched (n_blocks, 8, 8) matmul — the identical
-    per-block IEEE ops _idct_block performs — and the pixel scatter is
-    one reshape + crop instead of a per-pixel loop."""
+    component as a batched (n_blocks, 8, 8) matmul: dequantize, then
+    Cᵀ·deq·C per block, reconstructed as floor(v + 128.5) and clamped to
+    0..255 — and the pixel scatter is one reshape + crop instead of a
+    per-pixel loop."""
     w, h, comps, qtabs, htabs, scan_map, entropy = _jpeg_walk(data)
     dec_tabs = {k: _huff_decode_tables(*v) for k, v in htabs.items()}
     r = _BitReader(entropy)

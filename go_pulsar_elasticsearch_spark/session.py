@@ -77,6 +77,9 @@ def get_spark(app_name: str = "gpe-spark", cpus: int | None = None) -> SparkSess
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # static: Python workers fork from our daemon, whose zip imports
+        # skip the per-task re-read of pyspark.zip (see daemon.py)
+        .config("spark.python.daemon.module", "go_pulsar_elasticsearch_spark.daemon")
     )
     spark = builder.getOrCreate()
     return tune(spark)

@@ -154,8 +154,12 @@ def crawl_batch_body(
         # volume, measured r9: 8.1 s of a 10.4 s drain was sequential
         # body writes) instead of paying it serially (guide §2.6).
         # Every write still completes before the body returns, so the
-        # checkpoint barrier and replay idempotence are unchanged.
+        # checkpoint barrier and replay idempotence are unchanged.  Each
+        # write carries this thread's local properties (the stream's job
+        # group, scheduler pool) so query.stop() cancels it too.
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         batch_df.persist()
         try:
@@ -176,8 +180,9 @@ def crawl_batch_body(
                     .write.mode("overwrite")
                     .parquet(f"{stats_path}/epoch={epoch_id}")
                 )
+            inherit = inheritable_thread_target(batch_df.sparkSession)
             with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                for f in [pool.submit(w) for w in writes]:
+                for f in [pool.submit(inherit(w)) for w in writes]:
                     f.result()  # surface the first failure
         finally:
             batch_df.unpersist()

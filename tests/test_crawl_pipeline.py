@@ -158,3 +158,63 @@ def test_keep_best_flips_across_epochs(spark, tmp_path):
     assert row["kept_doc_id"] == 7
     assert row["n_variants"] == 2
     assert row["best_n_chars"] == 10
+
+
+def _mark_job_ids(spark, group: str) -> list[int]:
+    """Run one job in ``group`` and return its job ids once the status
+    store has seen them (the listener bus is asynchronous and in order, so
+    every earlier job is recorded by then)."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        spark.range(1).count()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, group
+        time.sleep(0.05)
+    return ids
+
+
+def test_crawl_epoch_writes_run_in_the_stream_job_group(spark, tmp_path):
+    """The epoch's store writes run from a thread pool; each must still
+    carry the stream's job group (its runId), or query.stop() cannot
+    cancel them."""
+    from go_pulsar_elasticsearch_spark.streaming.url_dedup import (
+        run_crawl_corpus_stream,
+    )
+
+    src = str(tmp_path / "src")
+    for lo in (0, 10):
+        spark.createDataFrame(
+            [(i, f"https://h{i % 3}.example/p", "t" * i)
+             for i in range(lo, lo + 10)],
+            "doc_id long, raw_url string, text string",
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("doc_id long, raw_url string, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    first = max(_mark_job_ids(spark, "crawl-group-before"))
+    q = run_crawl_corpus_stream(
+        stream,
+        spool_path=str(tmp_path / "spool"),
+        store_path=str(tmp_path / "store"),
+        checkpoint=str(tmp_path / "ckpt"),
+        stats_path=str(tmp_path / "stats"),
+    )
+    q.awaitTermination()
+    last = min(_mark_job_ids(spark, "crawl-group-after"))
+    launched = set(range(first + 1, last))
+    in_group = set(spark.sparkContext.statusTracker().getJobIdsForGroup(
+        str(q.runId)
+    ))
+    # two epochs of three writes each, at least one job per write
+    assert len(launched) >= 6
+    assert sorted(launched - in_group) == []
