@@ -3,7 +3,7 @@ for `Window.orderBy(...)` with no partition (which Spark executes as
 Exchange SinglePartition + one-task global sort: the one construct that
 cannot scale past a single executor core).
 
-Shape (identical for sum / max / row_number / ntile):
+Shape (identical for sum / max / ntile):
   pass 1: `repartitionByRange` on the order columns.  RangePartitioner
           guarantees partition i holds strictly lower keys than i+1 and
           never splits equal keys across partitions, so a per-partition
@@ -104,25 +104,6 @@ def global_running_max(df: DataFrame, order_exprs: list[Column],
         ranged.withColumn("_loc", F.max(value_col).over(local_w))
         .join(F.broadcast(offsets), "_pid")
         .withColumn(out_col, running)
-        .drop("_pid", "_loc", "_off")
-    )
-
-
-def global_row_number(df: DataFrame, order_exprs: list[Column],
-                      out_col: str, slot_key: str,
-                      n_parts: int = _N_PARTS) -> DataFrame:
-    """out = ROW_NUMBER() OVER (ORDER BY order_exprs); order_exprs must
-    be a total order (include a unique tie-break)."""
-    ranged = _ranged(df, order_exprs, slot_key, n_parts)
-    local_w = Window.partitionBy("_pid").orderBy(*order_exprs)
-    offsets = _offsets(
-        ranged, F.count(F.lit(1)),
-        lambda w: F.coalesce(F.sum("_pagg").over(w), F.lit(0)),
-    )
-    return (
-        ranged.withColumn("_loc", F.row_number().over(local_w))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_off") + F.col("_loc"))
         .drop("_pid", "_loc", "_off")
     )
 

@@ -65,10 +65,6 @@ def _read_long(buf: io.BytesIO) -> int:
 # ------------------------------------------------------------- schema walk
 
 
-def _branches(schema: Any) -> list:
-    return schema if isinstance(schema, list) else [schema]
-
-
 def _type_name(schema: Any) -> str:
     if isinstance(schema, str):
         return schema

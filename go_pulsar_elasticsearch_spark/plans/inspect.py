@@ -21,10 +21,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if the parquet scan's PushedFilters mentions `fragment`."""
     plan = formatted_plan(df)

@@ -2,10 +2,30 @@
 
 Two paths:
 - ``get_spark()``: build a session for tests/bench (local[N], AQE, Arrow).
+  Besides ``tune()``'s confs it sets these static confs, which cut the
+  fixed cost of every streaming trigger and every Python job:
+  - ``spark.python.daemon.module``: Python workers fork from
+    ``daemon.py``, whose zip imports skip the per-task re-read of
+    pyspark.zip;
+  - ``spark.sql.streaming.checkpointFileManagerClass``: the FileSystem
+    API manager writes the offset and commit logs.  Spark's default, the
+    FileContext manager, forks ``chmod`` several times per file where
+    Hadoop has no native library.  Both managers write to a temp file
+    and ``rename(2)`` it, which is atomic on the local POSIX file system
+    that a ``local[N]`` session checkpoints to, and both keep the
+    ``.crc`` checksums;
+  - ``spark.python.unix.domain.socket.enabled`` and ``.dir``: Python
+    workers talk to the JVM over Unix-domain sockets in an owner-only
+    (0700) directory, removed at exit.  A Unix socket skips Spark's
+    per-connection secret, so the directory's mode is what keeps other
+    users out.  Where a socket path there would not fit ``sun_path``,
+    workers keep TCP and the secret.
 - ``tune(spark)``: idempotently apply the *runtime* confs we depend on to a
   session we did not create (the driver owns the session for ``queries()``)
   — session timezone, AQE, shuffle parallelism.  Only runtime-settable
-  confs are touched, so this is safe on a live session.
+  confs are touched, so this is safe on a live session.  The static confs
+  above stay ``get_spark``'s: a session the engine did not build may
+  checkpoint to an object store, where a rename is not atomic.
 
 Scale posture: these defaults are for local[32] @ sf<=0.1.  On a real
 cluster the same code runs unchanged; shuffle partitions should be sized
@@ -16,7 +36,11 @@ yields ~500k-1M well-sized input splits.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +89,24 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# pyspark names each worker socket ``<dir>/.<uuid4>.sock`` (43 bytes past
+# the directory); Linux's sun_path holds 107 bytes plus the NUL
+_SOCKET_NAME_BYTES = len("/.") + 36 + len(".sock")
+_SUN_PATH_BYTES = 107
+
+
+@functools.cache
+def _worker_socket_dir() -> str | None:
+    """This process's owner-only directory for Python worker sockets,
+    removed at exit; None where a socket path in it would not fit."""
+    path = tempfile.mkdtemp(prefix="gpe")  # mode 0700 whatever the umask
+    if len(os.fsencode(path)) + _SOCKET_NAME_BYTES > _SUN_PATH_BYTES:
+        os.rmdir(path)
+        return None
+    atexit.register(shutil.rmtree, path, True)
+    return path
+
+
 def get_spark(app_name: str = "gpe-spark", cpus: int | None = None) -> SparkSession:
     """Session for tests and bench.  local[N] stands in for a cluster; all
     operator code is partition-aware and runs unchanged on multi-executor."""
@@ -80,6 +122,18 @@ def get_spark(app_name: str = "gpe-spark", cpus: int | None = None) -> SparkSess
         # static: Python workers fork from our daemon, whose zip imports
         # skip the per-task re-read of pyspark.zip (see daemon.py)
         .config("spark.python.daemon.module", "go_pulsar_elasticsearch_spark.daemon")
+        # static: offset and commit logs through the FileSystem API, and
+        # worker sockets in an owner-only directory (see module docstring)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
+    socket_dir = _worker_socket_dir()
+    if socket_dir is not None:
+        builder = builder.config(
+            "spark.python.unix.domain.socket.enabled", "true"
+        ).config("spark.python.unix.domain.socket.dir", socket_dir)
     spark = builder.getOrCreate()
     return tune(spark)

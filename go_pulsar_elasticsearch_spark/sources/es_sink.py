@@ -5,9 +5,9 @@ The reference bulk-indexes with DocumentID=uuid (last-write-wins upsert,
 429/5xx with exponential backoff + request compression (`es.go:133-158`),
 and a dated index behind an alias (`es.go:78-116`).
 
-With the elasticsearch-spark connector every one of those is an option,
-applied inside foreachBatch; without the jar (this container) the
-parquet dated-partition sink in streaming/stream.py reproduces the same
+With the elasticsearch-spark connector every one of those is an option
+(``EsSinkOptions.to_options``); without the jar the parquet
+dated-partition sink in streaming/stream.py reproduces the same
 semantics (key-addressed upsert + daily partitions) for tests.
 """
 
@@ -123,19 +123,3 @@ class EsSinkOptions:
             "es.batch.write.retry.wait": self.retry_wait,
         }
 
-
-def write_batch_to_es(batch_df: DataFrame, opts: EsSinkOptions,
-                      date_str: str) -> None:
-    """foreachBatch body for a real ES cluster: writes to the daily index
-    `<alias>_<date>` (es.go:79-81); alias flip stays an admin call.
-    The batch is validated against the strict index mapping first —
-    a schema drift fails the epoch loudly instead of producing per-item
-    bulk rejections."""
-    target = f"{opts.alias}_{date_str}"
-    batch_df = enforce_strict_mapping(batch_df)
-    (
-        batch_df.write.format("org.elasticsearch.spark.sql")
-        .options(**opts.to_options(target))
-        .mode("append")
-        .save()
-    )
