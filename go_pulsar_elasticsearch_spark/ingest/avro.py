@@ -124,8 +124,9 @@ def decode_avro_payload(raw: DataFrame, value_col: str = "value",
                         passthrough: tuple[str, ...] = ()) -> DataFrame:
     """R3: binary Avro -> typed columns, PERMISSIVE (undecodable rows get
     a null struct and flow to the DLQ split, matching main.go:131-143).
-    Callers: the hand-rolled delivery loop (operators/pulsar_loop.py)
-    and the ``decode_avro`` certification query.  The delivery stream
+    Callers: the DLQ read-back of the delivery certification queries
+    (operators/pulsar_loop.read_dispositions) and the ``decode_avro``
+    certification query.  The delivery stream
     does not call it: its epoch decodes with decode_strict in the same
     Arrow pass that posts `_bulk` (sources/pulsar_stream.py).
 

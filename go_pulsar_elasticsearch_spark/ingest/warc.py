@@ -8,9 +8,10 @@ document row — certified against the documents parquet itself, proving
 the writer+parser+source round-trip is lossless INCLUDING byte-exact
 Content-Length on multi-byte UTF-8 bodies.
 
-This is the batch half of the source story (pulsar_sim is the stream
-half): a reference user pointing the engine at real crawl dumps swaps
-the fixture writer for their segment listing; the reader, partitioning
+This is the batch half of the source story (the `pulsar_broker_sim`
+delivery stream of sources/pulsar_stream.py is the stream half): a
+reference user pointing the engine at real crawl dumps swaps the
+fixture writer for their segment listing; the reader, partitioning
 (one InputPartition per file), and downstream derivations are unchanged.
 """
 

@@ -7,27 +7,29 @@ the round-4 VERDICT's #1 gap: the ES half had a wire-protocol mock
 (sources/es_mock_cluster.py), the consume half's delivery semantics had
 only config parity maps.
 
-The loop mirrors main.go's intended structure (receiveMessage ->
+Both certification queries drain their fixture through the ONE
+delivery driver, the live stream of sources/pulsar_stream.py, which
+mirrors main.go's intended structure (receiveMessage ->
 bulkIndexProcess -> Ack/NAck; the reference's never-reset `found` bug
 at main.go:184 is deliberately NOT reproduced, same policy as
 sources/es_bulk.py):
 
 - RECEIVE pulls a bounded batch from the broker (the receive-channel
-  bound, .env CHANNEL_SIZE);
-- DECODE runs distributed (ingest/avro.py mapInPandas over the pure
-  codec), with the broker message id riding through as a passthrough
-  column;
-- INDEX posts `_bulk` from executors (sources/es_bulk.bulk_index_rows);
-- only (msg_id, uuid, status) METADATA returns to the driver to drive
-  ack/nack — bounded by the receive batch, never by corpus size (the
-  reference holds the same per-batch message handles in memory);
+  bound, .env CHANNEL_SIZE) as one micro-batch;
+- DECODE and INDEX share one executor-side `mapInArrow` pass per epoch:
+  the Avro payloads decode in the worker and post `_bulk` through
+  sources/es_bulk.bulk_index_keyed, which pairs results with broker
+  message ids by position;
+- only msg ids return to the driver to drive ack/nack — bounded by the
+  receive batch, never by corpus size (the reference holds the same
+  per-batch message handles in memory);
 - POISON rows (undecodable Avro) are nacked too: they ride the same
   redelivery -> DLQ-after-MaxDeliveries escalator, which is what the
   DLQ topic is FOR (the reference's handleError path merely counts and
   leaves the message unacked — delivery-loop limbo; divergence
   documented here).
 
-The certification query replays the whole story against the ORACLE's
+The certification queries replay the whole story against the ORACLE's
 closed form: docs the mock cluster persistently rejects must surface in
 the DLQ topic having been delivered exactly MaxDeliveries times, and
 every other doc must land in the index on its first delivery.  Both
@@ -49,127 +51,16 @@ _MAX_DELIVERIES = 3
 _TOPIC = "public/default/data.topic"
 _SUB = "data_subscription"
 _DLQ_TOPIC = "public/default/data.dlq"
-_DOC_COLS = ("identifier", "name", "uuid", "type", "ingestion_time", "tags")
-
-
-def index_and_reconcile(
-    raw: DataFrame,
-    broker,
-    topic: str,
-    subscription: str,
-    endpoint: str,
-    opts,
-) -> tuple[int, int]:
-    """One delivery round over a (msg_id long, value binary) frame:
-    distributed decode (msg_id passthrough) -> `_bulk` index -> ack
-    successes / nack per-item failures AND poison rows, keyed per
-    MESSAGE id.  msg_id rides through the bulk results as a passthrough
-    column (positional pairing), so two in-flight duplicates of one
-    uuid reconcile independently (round-5 ADVICE).  Returns (acked,
-    nacked); only batch-bounded metadata ever reaches the driver.
-
-    Used by the hand-rolled drain (run_delivery_loop) only.  The
-    Structured Streaming twin (sources/pulsar_stream.py) applies the
-    same ack/nack rules in its own foreachBatch epoch: one executor
-    job, no persist, no second collect."""
-    from go_pulsar_elasticsearch_spark.ingest.avro import (
-        decode_avro_payload,
-    )
-    from go_pulsar_elasticsearch_spark.sources.es_bulk import (
-        bulk_index_rows,
-    )
-
-    # decode once per round (two consumers: the ack map and the
-    # bulk post), then drop the cache before the next batch
-    decoded = decode_avro_payload(raw, passthrough=("msg_id",)).persist()
-    try:
-        docs = decoded.filter(F.col("uuid").isNotNull()).select(
-            *_DOC_COLS, "msg_id"
-        )
-        results = bulk_index_rows(
-            docs, endpoint, opts, passthrough=("msg_id",)
-        ).select("msg_id", "status")
-        ok_ids = {
-            r["msg_id"]
-            for r in results.filter(F.col("status") < 300).collect()
-        }
-        # batch-bounded METADATA; a msg_id absent from ok_ids is a
-        # per-item bulk failure OR poison (uuid NULL): same escalator
-        msg_ids = [r["msg_id"] for r in decoded.select("msg_id").collect()]
-    finally:
-        decoded.unpersist()
-    acked = nacked = 0
-    for mid in msg_ids:
-        if mid in ok_ids:
-            broker.ack(topic, subscription, mid)
-            acked += 1
-        else:
-            broker.nack(topic, subscription, mid)
-            nacked += 1
-    return acked, nacked
-
-
-def run_delivery_loop(
-    spark: SparkSession,
-    broker,
-    topic: str,
-    subscription: str,
-    endpoint: str,
-    index: str = "index_data",
-    batch_size: int = 2000,
-    max_rounds: int = 200,
-) -> dict:
-    """Drain ``topic`` through decode -> bulk -> ack/nack until every
-    message is acked or DLQ-routed.  Virtual time advances by the
-    broker's redelivery delay whenever nothing is receivable, so tests
-    never sleep.  Returns loop metrics (counts only)."""
-    from go_pulsar_elasticsearch_spark.sources.es_bulk import (
-        BulkClientOptions,
-    )
-
-    opts = BulkClientOptions(index=index, id_field="uuid")
-    rounds = received = acked = nacked = 0
-    while rounds < max_rounds:
-        msgs = broker.receive(topic, subscription, batch_size)
-        if not msgs:
-            if broker.pending(topic, subscription) == 0:
-                break
-            broker.advance(broker.nack_redelivery_delay_s)
-            continue
-        rounds += 1
-        received += len(msgs)
-        raw = spark.createDataFrame(
-            [(m.msg_id, bytearray(m.payload)) for m in msgs],
-            "msg_id long, value binary",
-        )
-        a, n = index_and_reconcile(
-            raw, broker, topic, subscription, endpoint, opts
-        )
-        acked += a
-        nacked += n
-    if broker.pending(topic, subscription):
-        raise RuntimeError(
-            f"delivery loop did not drain in {max_rounds} rounds"
-        )
-    return {
-        "rounds": rounds,
-        "received": received,
-        "acked": acked,
-        "nacked": nacked,
-        "dlq_routed": len(broker.topic_messages(broker.dlq_topic)),
-    }
 
 
 # --------------------------------------------------------------------------
 # pulsar_delivery_loop / pulsar_delivery_stream — certification queries
 # --------------------------------------------------------------------------
 
-_LOOP_STATE: dict[str, tuple] = {}    # sf_dir -> (broker, es_state, url)
-_STREAM_STATE: dict[str, tuple] = {}  # sf_dir -> (broker, es_state, url)
-
-# 5k messages drain the full escalator in a handful of rounds (round-5
-# VERDICT #7: the closed-form oracle scales trivially; 10k bought no
-# extra coverage, just bench weight)
+# the two queries differ only in how many messages they drain: 5k
+# run the full escalator in a handful of triggers (round-5 VERDICT #7:
+# the closed-form oracle scales trivially; 10k bought no extra
+# coverage, just bench weight)
 _N_LOOP = 5000
 _N_STREAM = 2000
 
@@ -292,71 +183,52 @@ def read_dispositions(
     return indexed.unionByName(dlq)
 
 
-def _drive(spark: SparkSession, sf_dir: str) -> tuple:
-    """Seed + drain the hand-rolled loop once per (process, sf_dir) —
-    memoized through the shared fixture (streaming/drain.py)."""
-    from go_pulsar_elasticsearch_spark.streaming.drain import drained
-
-    def build() -> tuple:
-        broker, es_state, url = seed_delivery_fixture(spark, sf_dir, _N_LOOP)
-        metrics = run_delivery_loop(
-            spark, broker, _TOPIC, _SUB, url, batch_size=5000
-        )
-        assert metrics["dlq_routed"] == len(es_state.fail_ids), metrics
-        return broker, es_state, url
-
-    return drained(("pulsar_loop", sf_dir), build)
-
-
-@register("pulsar_delivery_loop", _DELIVERY_ORACLE)
-def pulsar_delivery_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nack -> redeliver-after-delay -> DLQ-after-MaxDeliveries, hash-
-    certified: rejected docs must exit via the DLQ topic with exactly
-    MaxDeliveries deliveries, everything else lands in the index on
-    delivery 1.  Both dispositions read back over the wire (sliced
-    `_search` with projection pushdown; Avro re-decode of DLQ
-    payloads)."""
-    tune(spark)
-    broker, _es_state, url = _drive(spark, sf_dir)
-    return read_dispositions(spark, broker, url)
-
-
-def _drive_stream(spark: SparkSession, sf_dir: str) -> tuple:
-    """Seed + drain the LIVE Structured Streaming composition once per
-    (process, sf_dir): readStream.format("pulsar_broker_sim") -> decode
-    -> foreachBatch(_bulk -> manifest -> ack/nack) under a checkpoint — the
+def _drive(spark: SparkSession, sf_dir: str, n_events: int) -> tuple:
+    """Seed ``n_events`` messages and drain them through the LIVE
+    delivery stream once per (process, sf_dir, n_events):
+    readStream.format("pulsar_broker_sim") -> foreachBatch(decode +
+    `_bulk` -> manifest -> ack/nack) under a checkpoint — the
     reference's channel wiring (main.go:250-282) run by the engine's
-    own trigger/offset machinery instead of a driver while-loop."""
+    own trigger/offset machinery.  Memoized through the shared fixture
+    (streaming/drain.py)."""
+    from go_pulsar_elasticsearch_spark.sources.pulsar_stream import (
+        run_delivery_stream,
+    )
     from go_pulsar_elasticsearch_spark.streaming.drain import drained
 
     def build() -> tuple:
-        from go_pulsar_elasticsearch_spark.sources.pulsar_stream import (
-            run_delivery_stream,
-        )
-
-        # batch_size 1000 drains 2k messages in ~2 initial micro-batches
-        # + the redelivery waves — the engine's per-batch overhead, not
-        # the wire, dominates this harness, so fewer batches = faster
-        broker, es_state, url = seed_delivery_fixture(
-            spark, sf_dir, _N_STREAM
-        )
+        broker, es_state, url = seed_delivery_fixture(spark, sf_dir, n_events)
+        # batch_size 1000: the engine's per-batch overhead, not the
+        # wire, dominates this harness, so fewer batches = faster
         metrics = run_delivery_stream(
             spark, broker, _TOPIC, _SUB, url, batch_size=1000
         )
         assert metrics["dlq_routed"] == len(es_state.fail_ids), metrics
         return broker, es_state, url
 
-    return drained(("pulsar_stream", sf_dir), build)
+    return drained(("pulsar_delivery", sf_dir, n_events), build)
+
+
+@register("pulsar_delivery_loop", _DELIVERY_ORACLE)
+def pulsar_delivery_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """nack -> redeliver-after-delay -> DLQ-after-MaxDeliveries, hash-
+    certified over 5k messages: rejected docs must exit via the DLQ
+    topic with exactly MaxDeliveries deliveries, everything else lands
+    in the index on delivery 1.  Both dispositions read back over the
+    wire (sliced `_search` with projection pushdown; Avro re-decode of
+    DLQ payloads)."""
+    tune(spark)
+    broker, _es_state, url = _drive(spark, sf_dir, _N_LOOP)
+    return read_dispositions(spark, broker, url)
 
 
 @register("pulsar_delivery_stream", _STREAM_ORACLE)
 def pulsar_delivery_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The delivery loop as a LIVE StreamingQuery (round-5 VERDICT #1):
-    same escalator, same closed-form oracle, but the receive channel is
-    a streaming data source feeding foreachBatch under the engine's
-    checkpoint/offset log — replayable batches, restart-safe (the
-    mid-drain kill/restart path is pytest-certified in
-    tests/test_pulsar_stream.py)."""
+    """The same escalator and closed-form oracle over 2k messages: the
+    receive channel is a streaming data source feeding foreachBatch
+    under the engine's checkpoint/offset log — replayable batches,
+    restart-safe (the mid-drain kill/restart path is pytest-certified
+    in tests/test_pulsar_stream.py)."""
     tune(spark)
-    broker, _es_state, url = _drive_stream(spark, sf_dir)
+    broker, _es_state, url = _drive(spark, sf_dir, _N_STREAM)
     return read_dispositions(spark, broker, url)

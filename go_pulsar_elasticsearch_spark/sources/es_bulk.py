@@ -20,14 +20,22 @@ The heart of the reference is the bulk-index + per-item ack/nack/DLQ loop:
   mapping template (tolerating resource_already_exists_exception), then
   the alias flip.
 
-Spark shape: the bulk write is a *transformation* (`bulk_index_rows`
-under mapInPandas), emitting one (uuid, status, error, doc) row per
-document — so ack/nack reconciliation is a DataFrame filter, DLQ routing
-is a write of the failed slice, and everything distributes: each input
-partition posts its own bulk requests from its executor, which is the
-reference's N bulk workers (`es.go:164`, NUMBER_* in .env:3-5).  Strict
-mapping enforcement (sources/es_sink.py) runs BEFORE any bytes reach the
-wire, reproducing `dynamic: "strict"` (mapping.json:11) batch-wide.
+Spark shape: every `_bulk` post in the engine goes through ONE
+executor-side primitive, `bulk_index_keyed`: `(key, doc)` pairs in,
+`(key, doc, status, error)` out in input order, so each caller
+reconciles by position against its own key (a broker message id, a DLQ
+entry) — never by doc id, which two in-flight duplicates may share.
+Its callers are the delivery stream's epoch pass
+(sources/pulsar_stream.py), the `es_bulk_sim` writer and `replay_dlq`
+(sources/es_writer_sim.py), and `bulk_index_rows` below, the
+transformation form that emits one (uuid, status, error, doc) row per
+document — so ack/nack reconciliation is a DataFrame filter, DLQ
+routing is a write of the failed slice, and everything distributes:
+each input partition posts its own bulk requests from its executor,
+which is the reference's N bulk workers (`es.go:164`, NUMBER_* in
+.env:3-5).  Strict mapping enforcement (sources/es_sink.py) runs BEFORE
+any bytes reach the wire, reproducing `dynamic: "strict"`
+(mapping.json:11) batch-wide.
 
 Everything speaks plain HTTP via urllib (stdlib) — certified in pytest
 against an in-process mock `_bulk` endpoint (tests/test_es_bulk.py);
@@ -36,6 +44,7 @@ pointing `endpoint` at a real cluster is the same code path.
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import threading
@@ -43,9 +52,11 @@ import time
 import urllib.error
 import urllib.request
 from dataclasses import dataclass
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, TypeVar
 
 from pyspark.sql import DataFrame
+
+K = TypeVar("K")
 
 # es.go:139 — elasticsearch.Config{RetryOnStatus: [502, 503, 504, 429]}
 RETRY_STATUSES = frozenset({429, 502, 503, 504})
@@ -173,9 +184,9 @@ def bulk_index_docs(docs: list[dict], endpoint: str, opts: BulkClientOptions,
     thresholds are per-request here).  Returns per-item results in
     STRICT INPUT ORDER — results[i] pairs with docs[i].  ES bulk
     preserves action order within a request, and chunks are posted and
-    extended sequentially; the passthrough reconciliation in
-    bulk_index_rows and replay_dlq load-bearingly depends on this
-    positional pairing for msg_id-keyed ack/nack.  A response carrying
+    extended sequentially; bulk_index_keyed, the engine's one caller,
+    load-bearingly depends on this positional pairing to hand each
+    result back with its own key and doc.  A response carrying
     the WRONG item count raises BulkTransportError here — the contract
     owner enforces it once, so no caller can silently mis-pair (an
     unpaired tail would under-count or strand messages in flight)."""
@@ -209,12 +220,25 @@ def bulk_index_docs(docs: list[dict], endpoint: str, opts: BulkClientOptions,
     return out
 
 
-_RESULT_SCHEMA = "uuid string, status int, error string, doc string"
+def bulk_index_keyed(
+    pairs: Iterable[tuple[K, dict]], endpoint: str, opts: BulkClientOptions
+) -> Iterator[tuple[K, dict, int, str | None]]:
+    """The one bulk-and-reconcile primitive: post ``(key, doc)`` pairs
+    in ``opts.batch_entries`` slices through bulk_index_docs (which
+    keeps the byte bound and raises on a truncated response) and yield
+    ``(key, doc, status, error)`` in input order.  Pairing is by
+    POSITION, so two docs sharing an id each come back with their own
+    key and payload.  Runs executor-side; memory stays bounded by one
+    slice however long the input is."""
+    it = iter(pairs)
+    while chunk := list(itertools.islice(it, opts.batch_entries)):
+        results = bulk_index_docs([doc for _key, doc in chunk], endpoint, opts)
+        for (key, doc), (_rid, status, err) in zip(chunk, results):
+            yield key, doc, status, err
 
 
 def bulk_index_rows(df: DataFrame, endpoint: str,
-                    opts: BulkClientOptions | None = None,
-                    passthrough: tuple[str, ...] = ()) -> DataFrame:
+                    opts: BulkClientOptions | None = None) -> DataFrame:
     """Distributed bulk indexing as a transformation.
 
     Each input partition serializes its rows to JSON docs and posts bulk
@@ -225,13 +249,6 @@ def bulk_index_rows(df: DataFrame, endpoint: str,
     join back (the reference nacks the original message for the same
     reason, main.go:194-197).
 
-    `passthrough` names input columns carried to the result row WITHOUT
-    being indexed (e.g. a broker message id): because an ES bulk response
-    returns exactly one item per action IN ORDER, results pair with input
-    rows positionally, so the pairing stays exact even when two rows share
-    a doc id — keying reconciliation on a passthrough message id instead
-    of the (possibly duplicated) uuid (round-5 ADVICE).
-
     At 100 TB this is the right shape: no collect, no driver fan-in; the
     result frame is tiny per partition (ids + statuses) unless failures
     are pervasive, and failure payloads are exactly what must be
@@ -239,7 +256,6 @@ def bulk_index_rows(df: DataFrame, endpoint: str,
     """
     opts = opts or BulkClientOptions()
     endpoint_v, opts_v = endpoint, opts  # close over plain values only
-    pt_cols = tuple(passthrough)
 
     def run(batches):
         import pandas as pd
@@ -247,39 +263,27 @@ def bulk_index_rows(df: DataFrame, endpoint: str,
         for pdf in batches:
             if pdf.empty:
                 continue
-            pt = pdf[list(pt_cols)] if pt_cols else None
-            doc_pdf = pdf.drop(columns=list(pt_cols)) if pt_cols else pdf
-            docs = []
-            for rec in doc_pdf.to_dict("records"):
-                docs.append({k: _to_jsonable(v) for k, v in rec.items()})
-            results = bulk_index_docs(docs, endpoint_v, opts_v)
-            if len(results) != len(docs):
-                raise BulkTransportError(
-                    0, f"bulk item count {len(results)} != posted {len(docs)}"
-                )
-            out = pd.DataFrame(
-                {
-                    "uuid": [r[0] for r in results],
-                    "status": [r[1] for r in results],
-                    "error": [r[2] for r in results],
-                    # positional: the i-th result IS the i-th posted doc
-                    "doc": [
-                        None if 200 <= r[1] < 300
-                        else json.dumps(docs[i], separators=(",", ":"))
-                        for i, r in enumerate(results)
-                    ],
-                }
+            docs = (
+                (None, {k: _to_jsonable(v) for k, v in rec.items()})
+                for rec in pdf.to_dict("records")
             )
-            for c in pt_cols:
-                out[c] = pt[c].values
-            yield out
+            rows = [
+                (
+                    doc[opts_v.id_field],
+                    status,
+                    err,
+                    None if 200 <= status < 300
+                    else json.dumps(doc, separators=(",", ":")),
+                )
+                for _key, doc, status, err in bulk_index_keyed(
+                    docs, endpoint_v, opts_v
+                )
+            ]
+            yield pd.DataFrame(rows, columns=["uuid", "status", "error", "doc"])
 
-    schema = _RESULT_SCHEMA
-    if pt_cols:
-        schema += ", " + ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in pt_cols
-        )
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(
+        run, schema="uuid string, status int, error string, doc string"
+    )
 
 
 # --------------------------------------------------------------------------

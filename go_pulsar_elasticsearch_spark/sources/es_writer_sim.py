@@ -8,21 +8,24 @@ first-class, composable sink rather than only a callback:
 
   write(iterator)  runs once per partition per micro-batch on the
                    executor: rows -> JSON docs -> chunked ``_bulk``
-                   POSTs (429/5xx retry with doubling backoff via
-                   bulk_post), per-item failures spooled as NDJSON to
-                   the DLQ directory (reference R9's *intended*
-                   semantics — only failed items are re-routed,
-                   es.go:186-199 / main.go:173-202), returns a commit
-                   message with (partition, ok, failed) counts.
+                   POSTs through es_bulk.bulk_index_keyed (429/5xx
+                   retry with doubling backoff via bulk_post), per-item
+                   failures paired with their own payload by position
+                   and spooled as NDJSON to the DLQ directory, published
+                   atomically when the partition's write returns
+                   (reference R9's *intended* semantics — only failed
+                   items are re-routed, es.go:186-199 /
+                   main.go:173-202); returns a commit message with
+                   (partition, ok, failed) counts.
   commit(...)      driver-side after every partition succeeds: writes a
                    ``_commits/<batchId>.json`` manifest with the
                    aggregated counts — the exactly-once marker a replay
                    can check (the doc-id keyed index makes re-delivery
                    idempotent anyway, es.go:186).
   abort(...)       records ``_aborts/<batchId>.json`` so operators can
-                   see a half-failed epoch (per-item DLQ spool from
-                   completed partitions remains valid — items are
-                   id-keyed, replays overwrite).
+                   see a half-failed epoch (the DLQ spools of completed
+                   partitions remain valid — items are id-keyed, replays
+                   overwrite; a failed partition published none).
 
 100 TB posture: this is exactly the executor-parallel bulk-worker
 topology of the real connector — N partitions post independently, the
@@ -38,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid as uuid_mod
 from dataclasses import dataclass
 
@@ -49,6 +53,9 @@ from pyspark.sql.datasource import (
 )
 
 
+_DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
+
+
 @dataclass
 class EsBulkCommitMessage(WriterCommitMessage):
     partition_id: int
@@ -57,37 +64,43 @@ class EsBulkCommitMessage(WriterCommitMessage):
 
 
 class _DlqSpool:
-    """Lazily opened per-partition NDJSON spool for per-item bulk
-    failures — the ONE definition of the DLQ record shape, shared by
-    the fixed-index and rollover write paths."""
+    """One partition's NDJSON spool of per-item bulk failures, published
+    atomically: entries go to a ``.tmp`` file that no ``*.ndjson`` glob
+    matches; when the partition's write returns, the file is fsynced and
+    renamed to ``<prefix>-<hex>.ndjson``, and when it raises, the file
+    is removed.  A killed task leaves no half-written line for
+    replay_dlq to read, and a retried attempt adds no duplicates.  Used
+    as a context manager around the partition's write; nothing is
+    created until the first entry."""
 
-    def __init__(self, dlq_dir: str, pid: int):
-        self._dir = dlq_dir
-        self._pid = pid
+    def __init__(self, dlq_dir: str, prefix: str):
+        self._path = dlq_dir and os.path.join(
+            dlq_dir, f"{prefix}-{uuid_mod.uuid4().hex}.ndjson"
+        )
         self._fh = None
 
-    def entry(self, rid, status, err, doc) -> None:
-        if not self._dir:
+    def put(self, entry: dict) -> None:
+        if not self._path:
             return
         if self._fh is None:
-            os.makedirs(self._dir, exist_ok=True)
-            self._fh = open(
-                os.path.join(
-                    self._dir,
-                    f"part-{self._pid}-{uuid_mod.uuid4().hex}.ndjson",
-                ),
-                "w",
-            )
-        self._fh.write(
-            json.dumps(
-                {"uuid": rid, "status": status, "error": err, "doc": doc}
-            )
-            + "\n"
-        )
+            os.makedirs(os.path.dirname(self._path), exist_ok=True)
+            self._fh = open(self._path + ".tmp", "w")
+        self._fh.write(json.dumps(entry) + "\n")
 
-    def close(self) -> None:
-        if self._fh is not None:
+    def __enter__(self) -> "_DlqSpool":
+        return self
+
+    def __exit__(self, exc_type, _exc, _tb) -> None:
+        if self._fh is None:
+            return
+        if exc_type is not None:
             self._fh.close()
+            os.remove(self._fh.name)
+            return
+        self._fh.flush()
+        os.fsync(self._fh.fileno())
+        self._fh.close()
+        os.rename(self._fh.name, self._path)
 
 
 class EsBulkStreamWriter(DataSourceStreamWriter):
@@ -108,64 +121,55 @@ class EsBulkStreamWriter(DataSourceStreamWriter):
         )
 
     def write(self, iterator):
-        if self.rollover_alias:
-            return self._write_rollover(iterator)
-        return self._write_fixed(iterator)
-
-    def _write_fixed(self, iterator):
         from pyspark import TaskContext
 
         from go_pulsar_elasticsearch_spark.sources.es_bulk import (
             BulkClientOptions,
             _to_jsonable,
-            bulk_index_docs,
+            bulk_index_keyed,
         )
 
-        opts = BulkClientOptions(
-            index=self.index,
-            id_field=self.id_field,
-            batch_entries=self.batch_entries,
-        )
         pid = TaskContext.get().partitionId()
         n_ok = n_failed = 0
-        spool = _DlqSpool(self.dlq_dir, pid)
 
-        def flush(chunk: list[dict]) -> None:
-            # chunked consumption: memory stays O(batch_entries), never
-            # O(partition), matching the module's scale claim.
-            # bulk_index_docs enforces the results==actions pairing.
-            nonlocal n_ok, n_failed
-            results = bulk_index_docs(chunk, self.endpoint, opts)
-            by_id = {d[self.id_field]: d for d in chunk}
-            for rid, status, err in results:
-                if status < 300:
-                    n_ok += 1
-                    continue
+        with _DlqSpool(self.dlq_dir, f"part-{pid}") as spool:
+
+            def fail(doc: dict, status: int, err: str | None) -> None:
+                nonlocal n_failed
                 n_failed += 1
-                spool.entry(rid, status, err, by_id.get(rid))
+                spool.put({"uuid": doc.get(self.id_field), "status": status,
+                           "error": err, "doc": doc})
 
-        chunk: list[dict] = []
-        try:
-            for row in iterator:
-                # DEEP JSON-safety (nested timestamps included) via the
-                # shared converter — a shallow isoformat pass misses
-                # datetimes inside structs/arrays
-                chunk.append(
-                    {
-                        k: _to_jsonable(v)
-                        for k, v in row.asDict(recursive=True).items()
-                    }
+            def post(docs, index: str) -> None:
+                nonlocal n_ok
+                opts = BulkClientOptions(
+                    index=index,
+                    id_field=self.id_field,
+                    batch_entries=self.batch_entries,
                 )
-                if len(chunk) >= self.batch_entries:
-                    flush(chunk)
-                    chunk = []
-            if chunk:
-                flush(chunk)
-        finally:
-            spool.close()
+                for _key, doc, status, err in bulk_index_keyed(
+                    ((None, d) for d in docs), self.endpoint, opts
+                ):
+                    if status < 300:
+                        n_ok += 1
+                    else:
+                        fail(doc, status, err)
+
+            # DEEP JSON-safety (nested timestamps included) via the
+            # shared converter — a shallow isoformat pass misses
+            # datetimes inside structs/arrays
+            docs = (
+                {k: _to_jsonable(v)
+                 for k, v in row.asDict(recursive=True).items()}
+                for row in iterator
+            )
+            if self.rollover_alias:
+                self._post_by_day(docs, post, fail)
+            else:
+                post(docs, self.index)
         return EsBulkCommitMessage(pid, n_ok, n_failed)
 
-    def _write_rollover(self, iterator):
+    def _post_by_day(self, docs, post, fail) -> None:
         """Per-day routed variant of the bulk write: docs buffer per
         their date value; each day's first doc triggers the idempotent
         index-ensure + monotonic alias flip (es_bulk.
@@ -173,82 +177,42 @@ class EsBulkStreamWriter(DataSourceStreamWriter):
         index directly — a stream crossing midnight lands pre-midnight
         docs in day N's index and post-midnight docs in day N+1's,
         with the alias moving forward exactly once."""
-        from pyspark import TaskContext
-
         from go_pulsar_elasticsearch_spark.sources.es_bulk import (
-            BulkClientOptions,
-            _to_jsonable,
-            bulk_index_docs,
             rollover_dated_index,
         )
 
-        import re
+        def flush(date: str) -> None:
+            post(
+                bufs.pop(date),
+                rollover_dated_index(self.endpoint, self.rollover_alias, date),
+            )
 
-        pid = TaskContext.get().partitionId()
-        n_ok = n_failed = 0
-        spool = _DlqSpool(self.dlq_dir, pid)
         bufs: dict[str, list[dict]] = {}
-        date_re = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-
-        def flush(date: str, docs: list[dict]) -> None:
-            nonlocal n_ok, n_failed
-            index = rollover_dated_index(
-                self.endpoint, self.rollover_alias, date
-            )
-            opts = BulkClientOptions(
-                index=index,
-                id_field=self.id_field,
-                batch_entries=self.batch_entries,
-            )
-            # bulk_index_docs enforces the results==actions pairing
-            results = bulk_index_docs(docs, self.endpoint, opts)
-            by_id = {d[self.id_field]: d for d in docs}
-            for rid, status, err in results:
-                if status < 300:
-                    n_ok += 1
-                    continue
-                n_failed += 1
-                spool.entry(rid, status, err, by_id.get(rid))
-
-        try:
-            for row in iterator:
-                d = {
-                    k: _to_jsonable(v)
-                    for k, v in row.asDict(recursive=True).items()
-                }
-                # the routing value is metadata, never indexed (strict
-                # mapping); ISO timestamps truncate to their day.  An
-                # ABSENT field is a configuration bug (typo'd option /
-                # renamed column) and must fail the task loudly — only
-                # a present-but-invalid VALUE is a data problem that
-                # DLQs the row
-                if self.rollover_date_field not in d:
-                    raise KeyError(
-                        f"rollover_date_field {self.rollover_date_field!r}"
-                        f" missing from row columns {sorted(d)}"
-                    )
-                date = str(d.pop(self.rollover_date_field))[:10]
-                if not date_re.match(date):
-                    # a NULL/garbled routing date must never mint an
-                    # index (lexically 'None' sorts past every real day
-                    # and would hijack the alias forward) — DLQ it
-                    n_failed += 1
-                    spool.entry(
-                        d.get(self.id_field),
-                        0,
-                        f"invalid rollover date {date!r}",
-                        d,
-                    )
-                    continue
-                bufs.setdefault(date, []).append(d)
-                if len(bufs[date]) >= self.batch_entries:
-                    flush(date, bufs.pop(date))
-            # ascending day order so the alias lands on the newest day
-            for date in sorted(bufs):
-                flush(date, bufs.pop(date))
-        finally:
-            spool.close()
-        return EsBulkCommitMessage(pid, n_ok, n_failed)
+        for d in docs:
+            # the routing value is metadata, never indexed (strict
+            # mapping); ISO timestamps truncate to their day.  An
+            # ABSENT field is a configuration bug (typo'd option /
+            # renamed column) and must fail the task loudly — only
+            # a present-but-invalid VALUE is a data problem that
+            # DLQs the row
+            if self.rollover_date_field not in d:
+                raise KeyError(
+                    f"rollover_date_field {self.rollover_date_field!r}"
+                    f" missing from row columns {sorted(d)}"
+                )
+            date = str(d.pop(self.rollover_date_field))[:10]
+            if not _DATE_RE.match(date):
+                # a NULL/garbled routing date must never mint an
+                # index (lexically 'None' sorts past every real day
+                # and would hijack the alias forward) — DLQ it
+                fail(d, 0, f"invalid rollover date {date!r}")
+                continue
+            bufs.setdefault(date, []).append(d)
+            if len(bufs[date]) >= self.batch_entries:
+                flush(date)
+        # ascending day order so the alias lands on the newest day
+        for date in sorted(bufs):
+            flush(date)
 
     def commit(self, messages, batchId) -> None:
         os.makedirs(os.path.join(self.state_dir, "_commits"), exist_ok=True)
@@ -320,8 +284,8 @@ def replay_dlq(spark, dlq_dir: str, endpoint: str, index: str = "index_data",
 
     Distributed shape (round-4 VERDICT #2): the spool is read as a raw
     text source, each partition re-posts its own entries AND writes its
-    own survivor spool file (write -> fsync -> rename, so a half-written
-    file can never be globbed by a later replay), and ONLY per-partition
+    own survivor spool file (a _DlqSpool, so a half-written file can
+    never be globbed by a later replay), and ONLY per-partition
     counts cross to the driver — nothing doc-sized is ever collected,
     so a down-cluster DLQ of any volume replays in executor memory.
     Crash-safe ordering is unchanged: survivor spools are fully
@@ -342,60 +306,39 @@ def replay_dlq(spark, dlq_dir: str, endpoint: str, index: str = "index_data",
 
         from go_pulsar_elasticsearch_spark.sources.es_bulk import (
             BulkClientOptions,
-            bulk_index_docs,
+            bulk_index_keyed,
         )
 
         opts = BulkClientOptions(index=index_, id_field=id_field_)
         pid = TaskContext.get().partitionId()
         n_replayed = n_ok = n_failed = 0
-        spool_fh = None
-        spool_tmp = spool_final = None
-        def spool(entry: dict) -> None:
-            nonlocal spool_fh, spool_tmp, spool_final
-            if spool_fh is None:
-                spool_final = os.path.join(
-                    dlq_dir_,
-                    f"replay-{pid}-{uuid_mod.uuid4().hex}.ndjson",
-                )
-                spool_tmp = spool_final + ".tmp"
-                spool_fh = open(spool_tmp, "w")
-            spool_fh.write(json.dumps(entry) + "\n")
+        with _DlqSpool(dlq_dir_, f"replay-{pid}") as spool:
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            entries = [json.loads(ln) for ln in pdf["value"]]
-            # doc-less entries (legacy spools) are unreplayable: keep
-            # them spooled, never post them — a None doc would break
-            # docs_to_ndjson on this very run (round-5 ADVICE)
-            replayable = [e for e in entries if e.get("doc") is not None]
-            for e in entries:
-                if e.get("doc") is None:
-                    n_failed += 1
-                    spool(dict(e))
-            docs = [e["doc"] for e in replayable]
-            # bulk_index_docs enforces the results==actions pairing
-            results = bulk_index_docs(docs, endpoint_, opts)
-            n_replayed += len(results)
-            # positional pairing: the i-th result IS the i-th posted doc
-            # (an ES bulk response preserves action order), so a survivor
-            # always carries its own original payload — even when two
-            # entries share a uuid (round-5 ADVICE)
-            for i, (rid, status, err) in enumerate(results):
+            def replayable():
+                nonlocal n_failed
+                for pdf in batches:
+                    for line in pdf["value"]:
+                        entry = json.loads(line)
+                        if entry.get("doc") is None:
+                            # doc-less entries (legacy spools) are
+                            # unreplayable: keep them spooled, never
+                            # post them (round-5 ADVICE)
+                            n_failed += 1
+                            spool.put(entry)
+                        else:
+                            yield entry, entry["doc"]
+
+            # each survivor carries its own original payload, even
+            # when two entries share a uuid (round-5 ADVICE)
+            for entry, _doc, status, err in bulk_index_keyed(
+                replayable(), endpoint_, opts
+            ):
+                n_replayed += 1
                 if status < 300:
                     n_ok += 1
-                    continue
-                n_failed += 1
-                entry = dict(replayable[i])
-                entry["status"], entry["error"] = status, err
-                spool(entry)
-        if spool_fh is not None:
-            spool_fh.flush()
-            os.fsync(spool_fh.fileno())
-            spool_fh.close()
-            # publish atomically: a crash mid-write leaves only a .tmp
-            # the ndjson glob ignores; consumed files are still intact
-            os.rename(spool_tmp, spool_final)
+                else:
+                    n_failed += 1
+                    spool.put({**entry, "status": status, "error": err})
         yield pd.DataFrame(
             {
                 "replayed": pd.Series([n_replayed], dtype="int64"),

@@ -3,13 +3,11 @@
 and bulk processor (main.go:250-282) IS the streaming engine's job, so
 this module runs it under the engine's own trigger/offset machinery —
 ``readStream.format("pulsar_broker_sim")`` feeding
-``foreachBatch(epoch)`` with a checkpoint — instead of the hand-rolled
-driver while-loop (operators/pulsar_loop.py, kept as the certified
-reference implementation).  The two drivers reconcile with the same
-rules (ack on a 2xx item, nack on a failed item or a poison row, msg
-ids paired positionally with bulk results) but through separate code:
-the loop's ``index_and_reconcile`` collects outcomes from a bulk
-DataFrame, the stream's epoch from one ``mapInArrow`` job.
+``foreachBatch(epoch)`` with a checkpoint.  It is the engine's one
+delivery driver: both certification queries (operators/pulsar_loop.py)
+drain through ``run_delivery_stream``.  Its rules: ack on a 2xx item,
+nack on a failed item or a poison row, msg ids paired positionally with
+bulk results through es_bulk.bulk_index_keyed.
 
 Process topology (discovered the hard way): Spark runs a Python
 streaming source's ``read()`` in a SEPARATE worker process
@@ -52,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time as _time
 import urllib.request
@@ -252,7 +251,8 @@ def _epoch_pass(endpoint: str, index: str):
     worker, as parseMsg feeds the bulk indexer in-process in the
     reference (main.go:145-158, es.go:160-213).  Poison (undecodable
     payloads, a NULL uuid) is never posted; its msg ids go straight to
-    the nack list, the certified loop's escalator (main.go:131-143)."""
+    the nack list and ride the redelivery -> DLQ escalator
+    (main.go:131-143)."""
 
     def run(batches):
         import pyarrow as pa
@@ -264,7 +264,7 @@ def _epoch_pass(endpoint: str, index: str):
         )
         from go_pulsar_elasticsearch_spark.sources.es_bulk import (
             BulkClientOptions,
-            bulk_index_docs,
+            bulk_index_keyed,
         )
 
         schema = avro_codec.parse_schema(INGESTION_AVRO_SCHEMA)
@@ -273,37 +273,26 @@ def _epoch_pass(endpoint: str, index: str):
         )
         ok_ids: list[int] = []
         bad_ids: list[int] = []
-        chunk: list[dict] = []
-        mids: list[int] = []
 
-        def flush() -> None:
-            # strict input-order pairing: results[i] IS chunk[i] — the
-            # bulk_index_docs contract, which also RAISES on a
-            # truncated response (an unpaired tail would strand
-            # messages in flight, never acked, never nacked) — so msg
-            # ids pair positionally even when two in-flight duplicates
-            # share a uuid
-            results = bulk_index_docs(chunk, endpoint, opts)
-            for (_rid, status, _err), mid in zip(results, mids):
-                (ok_ids if status < 300 else bad_ids).append(mid)
-            chunk.clear()
-            mids.clear()
+        def decoded():
+            for batch in batches:
+                for mid, value in zip(
+                    batch.column("msg_id").to_pylist(),
+                    batch.column("value").to_pylist(),
+                ):
+                    doc = decode_strict(value, schema)
+                    if doc is None or doc["uuid"] is None:
+                        bad_ids.append(mid)  # poison: straight to nack
+                    else:
+                        yield mid, doc
 
-        for batch in batches:
-            for mid, value in zip(
-                batch.column("msg_id").to_pylist(),
-                batch.column("value").to_pylist(),
-            ):
-                doc = decode_strict(value, schema)
-                if doc is None or doc["uuid"] is None:
-                    bad_ids.append(mid)  # poison: straight to nack
-                    continue
-                chunk.append(doc)
-                mids.append(mid)
-                if len(chunk) >= _BATCH_ENTRIES:
-                    flush()
-        if chunk:
-            flush()
+        # results pair with msg ids by position, even when two in-flight
+        # duplicates share a uuid; a truncated `_bulk` response raises
+        # (an unpaired tail would strand messages in flight)
+        for mid, _doc, status, _err in bulk_index_keyed(
+            decoded(), endpoint, opts
+        ):
+            (ok_ids if status < 300 else bad_ids).append(mid)
         ids = pa.list_(pa.int64())
         yield pa.RecordBatch.from_arrays(
             [pa.array([ok_ids], ids), pa.array([bad_ids], ids)],
@@ -424,17 +413,26 @@ def run_delivery_stream(
 ) -> dict:
     """Stand the broker's HTTP wire endpoint up, start the delivery
     stream, drain until every message is acked or DLQ-routed, stop, and
-    return loop metrics plus the stopped ``query`` (its runId and
-    recentProgress stay readable) — the StreamingQuery twin of
-    run_delivery_loop.  The ``broker`` object is used only to stand the
-    server up and read final metrics; the query itself talks
-    wire-only."""
+    return drain metrics plus the stopped ``query`` (its runId and
+    recentProgress stay readable).  The ``broker`` object is used only
+    to stand the server up and read final metrics; the query itself
+    talks wire-only.  Checkpoint, spool and manifest directories the
+    caller does not pass are made here and removed after the stop."""
     from go_pulsar_elasticsearch_spark.sources.pulsar_mock_broker import (
         make_broker_server,
     )
 
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="gpe-ckpt-")
-    spool_dir = spool_dir or tempfile.mkdtemp(prefix="gpe-spool-")
+    made: list[str] = []
+
+    def scratch(given: str | None, prefix: str) -> str:
+        if given:
+            return given
+        made.append(tempfile.mkdtemp(prefix=prefix))
+        return made[-1]
+
+    checkpoint_dir = scratch(checkpoint_dir, "gpe-ckpt-")
+    spool_dir = scratch(spool_dir, "gpe-spool-")
+    state_dir = scratch(state_dir, "gpe-sinkstate-")
     srv, broker_url = make_broker_server(broker)
     q = start_delivery_stream(
         spark,
@@ -462,6 +460,8 @@ def run_delivery_stream(
         q.stop()
         q.awaitTermination(30)
         srv.shutdown()
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)
     return {
         "pending": broker.pending(topic, subscription),
         "dlq_routed": len(broker.topic_messages(broker.dlq_topic)),

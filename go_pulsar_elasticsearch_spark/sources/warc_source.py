@@ -222,13 +222,13 @@ class _WarcStreamReader(SimpleDataSourceStreamReader):
     with its final content (rename into place — write_warc does this)
     and never changes after; a listed name is therefore complete, the
     offset marks it consumed forever, and replay (readBetweenOffsets)
-    is exact — the same self-describing-offset idempotence pulsar_sim's
-    stream reader uses.  Names retention has deleted from the spool are
-    PRUNED from the offset on the next advance (write-once means a
-    deleted name can never return with new data), so checkpoint size
-    tracks the live spool, not the stream's lifetime.  maxFilesPerBatch
-    bounds each micro-batch (≡ maxOffsetsPerTrigger-style rate
-    limiting)."""
+    is exact, as it is for the delivery stream's spooled batches
+    (sources/pulsar_stream.py).  Names retention has deleted from the
+    spool are PRUNED from the offset on the next advance (write-once
+    means a deleted name can never return with new data), so checkpoint
+    size tracks the live spool, not the stream's lifetime.
+    maxFilesPerBatch bounds each micro-batch (≡ maxOffsetsPerTrigger-
+    style rate limiting)."""
 
     def __init__(self, options):
         self._dir = options.get("path")

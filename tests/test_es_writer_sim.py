@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
 import pytest
 
@@ -141,6 +142,57 @@ def test_batch_writer_delivers_same_path(spark, tmp_path, mock_es):
     assert {d["uuid"] for d in spooled} == {"b2"}
     manifest = json.load(open(f"{state_dir}/_commits/0.json"))
     assert manifest["n_ok"] == 5 and manifest["n_failed"] == 1
+
+
+def test_dlq_entries_keep_their_own_doc_when_uuids_repeat(
+    spark, tmp_path, mock_es
+):
+    """Two rejected rows sharing a uuid each reach the DLQ with their
+    OWN payload, in input order: results pair with docs by position,
+    never by doc id."""
+    state, url = mock_es
+    state.fail_ids = {"dup"}
+    df = spark.createDataFrame(
+        [("dup", "first"), ("dup", "second")], "uuid string, name string"
+    ).coalesce(1)
+    dlq = str(tmp_path / "dlq")
+    spark.dataSource.register(EsBulkDataSource)
+    (
+        df.write.format("es_bulk_sim")
+        .option("endpoint", url)
+        .option("state_dir", str(tmp_path / "state"))
+        .option("dlq_dir", dlq)
+        .mode("append")
+        .save()
+    )
+    (spool,) = glob.glob(f"{dlq}/*.ndjson")
+    entries = [json.loads(line) for line in open(spool)]
+    assert [e["doc"] for e in entries] == [
+        {"uuid": "dup", "name": "first"},
+        {"uuid": "dup", "name": "second"},
+    ]
+
+
+def test_dlq_spool_publishes_only_a_returned_write(tmp_path):
+    """A partition's DLQ entries become a ``*.ndjson`` file only when
+    its write returns (write -> fsync -> rename); a write that raises
+    leaves no ``*.ndjson`` behind, so replay_dlq never globs a
+    half-written or duplicated spool."""
+    from go_pulsar_elasticsearch_spark.sources.es_writer_sim import _DlqSpool
+
+    dlq = str(tmp_path / "dlq")
+    entry = {"uuid": "u1", "status": 400, "error": "x", "doc": {"uuid": "u1"}}
+    with _DlqSpool(dlq, "part-0") as spool:
+        spool.put(entry)
+        assert not glob.glob(f"{dlq}/*.ndjson")
+    (published,) = glob.glob(f"{dlq}/*.ndjson")
+    assert [json.loads(line) for line in open(published)] == [entry]
+
+    with pytest.raises(RuntimeError):
+        with _DlqSpool(dlq, "part-1") as spool:
+            spool.put(entry)
+            raise RuntimeError("task failed mid-partition")
+    assert os.listdir(dlq) == [os.path.basename(published)]
 
 
 def test_replay_dlq_reindexes_after_fix(spark, tmp_path, mock_es):

@@ -1,9 +1,14 @@
 """Pulsar delivery-loop semantics (sources/pulsar_mock_broker.py +
-operators/pulsar_loop.run_delivery_loop): nack -> redelivery after
-NackRedeliveryDelay -> DLQ topic after MaxDeliveries (pulsar.go:96-100),
-driven end-to-end into the `_bulk` sink with injected per-item failures."""
+the delivery stream, sources/pulsar_stream.run_delivery_stream): nack ->
+redelivery after NackRedeliveryDelay -> DLQ topic after MaxDeliveries
+(pulsar.go:96-100), driven end-to-end into the `_bulk` sink with
+injected per-item failures."""
 
 from __future__ import annotations
+
+import glob
+import json
+import os
 
 import pytest
 
@@ -123,14 +128,34 @@ def _publish_ingestion(broker, n=40):
         broker.publish(TOPIC, avro_codec.encode(schema, rec))
 
 
-def test_loop_acks_indexes_and_dlqs_end_to_end(spark, mock_es):
+def _drain(spark, broker, url, tmp_path, batch_size):
+    """Drain through the delivery stream; returns its metrics and the
+    summed ``_commits/<batchId>.json`` manifests."""
+    from go_pulsar_elasticsearch_spark.sources.pulsar_stream import (
+        run_delivery_stream,
+    )
+
+    state = str(tmp_path / "state")
+    m = run_delivery_stream(
+        spark, broker, TOPIC, SUB, url, batch_size=batch_size,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        spool_dir=str(tmp_path / "spool"),
+        state_dir=state,
+    )
+    manifests = [
+        json.load(open(f))
+        for f in glob.glob(os.path.join(state, "_commits", "*.json"))
+    ]
+    m["received"] = sum(p["numInputRows"] for p in m["query"].recentProgress)
+    m["acked"] = sum(c["n_ok"] for c in manifests)
+    m["nacked"] = sum(c["n_failed"] for c in manifests)
+    return m
+
+
+def test_loop_acks_indexes_and_dlqs_end_to_end(spark, mock_es, tmp_path):
     """Injected per-item bulk failures come back around exactly
     MaxDeliveries times, then land in the DLQ topic exactly once;
     everything else indexes on delivery 1."""
-    from go_pulsar_elasticsearch_spark.operators.pulsar_loop import (
-        run_delivery_loop,
-    )
-
     state, url = mock_es
     state.fail_ids = {"u3", "u17"}
     broker = MockPulsarBroker(nack_redelivery_delay_s=5, max_deliveries=3)
@@ -138,7 +163,7 @@ def test_loop_acks_indexes_and_dlqs_end_to_end(spark, mock_es):
     # one poison payload: undecodable Avro must ride the same escalator
     poison_id = broker.publish(TOPIC, b"\xff\xff\xff not avro")
 
-    m = run_delivery_loop(spark, broker, TOPIC, SUB, url, batch_size=16)
+    m = _drain(spark, broker, url, tmp_path, batch_size=16)
     assert m["dlq_routed"] == 3                       # u3, u17, poison
     assert sorted(state.docs) == sorted(
         f"u{i}" for i in range(40) if i not in (3, 17)
@@ -154,14 +179,10 @@ def test_loop_acks_indexes_and_dlqs_end_to_end(spark, mock_es):
     assert broker.pending(TOPIC, SUB) == 0
 
 
-def test_loop_replay_after_crash_is_idempotent(spark, mock_es):
+def test_loop_replay_after_crash_is_idempotent(spark, mock_es, tmp_path):
     """Consumer crash mid-loop (in-flight messages redelivered with
     their counts intact): the doc-id keyed index makes the replay
     converge to the same final state (es.go:186)."""
-    from go_pulsar_elasticsearch_spark.operators.pulsar_loop import (
-        run_delivery_loop,
-    )
-
     state, url = mock_es
     broker = MockPulsarBroker(nack_redelivery_delay_s=5, max_deliveries=3)
     _publish_ingestion(broker, n=20)
@@ -170,7 +191,7 @@ def test_loop_replay_after_crash_is_idempotent(spark, mock_es):
     assert len(got) == 7
     assert broker.redeliver_unacked(TOPIC, SUB) == 7
 
-    m = run_delivery_loop(spark, broker, TOPIC, SUB, url, batch_size=8)
+    m = _drain(spark, broker, url, tmp_path, batch_size=8)
     assert sorted(state.docs) == sorted(f"u{i}" for i in range(20))
     assert m["dlq_routed"] == 0
     assert broker.pending(TOPIC, SUB) == 0
@@ -179,18 +200,14 @@ def test_loop_replay_after_crash_is_idempotent(spark, mock_es):
     assert len(state.docs) == 20
 
 
-def test_loop_recovers_after_transient_rejects(spark, mock_es):
+def test_loop_recovers_after_transient_rejects(spark, mock_es, tmp_path):
     """A whole-request 429 retries inside bulk_post (es.go:139-144)
     without consuming a delivery attempt — the loop still drains with
     zero DLQ routing."""
-    from go_pulsar_elasticsearch_spark.operators.pulsar_loop import (
-        run_delivery_loop,
-    )
-
     state, url = mock_es
     state.reject_queue = [429, 503]
     broker = MockPulsarBroker(nack_redelivery_delay_s=5, max_deliveries=3)
     _publish_ingestion(broker, n=12)
-    m = run_delivery_loop(spark, broker, TOPIC, SUB, url, batch_size=12)
+    m = _drain(spark, broker, url, tmp_path, batch_size=12)
     assert m["dlq_routed"] == 0
     assert len(state.docs) == 12

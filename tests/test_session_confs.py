@@ -12,7 +12,8 @@ import stat
 import tempfile
 
 from go_pulsar_elasticsearch_spark import session
-from go_pulsar_elasticsearch_spark.sources.pulsar_sim import register
+from go_pulsar_elasticsearch_spark.sources.es_mock_cluster import make_server
+from go_pulsar_elasticsearch_spark.sources.es_reader_sim import EsSearchDataSource
 
 
 def test_worker_sockets_live_in_an_owner_only_directory(spark):
@@ -33,8 +34,16 @@ def test_worker_sockets_live_in_an_owner_only_directory(spark):
     # the daemon's listening socket sits in the directory
     assert any(n.endswith(".sock") for n in os.listdir(sock_dir))
 
-    register(spark)
-    assert spark.read.format("pulsar_sim").option("numRows", 10).load().count() == 10
+    srv, state, url = make_server()
+    try:
+        for i in range(10):
+            state.docs[str(i)] = {"uuid": str(i)}
+            state.doc_index[str(i)] = "index_data"
+        spark.dataSource.register(EsSearchDataSource)
+        read = spark.read.format("es_search_sim").schema("uuid string")
+        assert read.option("endpoint", url).load().count() == 10
+    finally:
+        srv.shutdown()
 
 
 def test_no_socket_directory_where_a_socket_path_would_not_fit(monkeypatch, tmp_path):
